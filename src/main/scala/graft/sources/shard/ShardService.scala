@@ -66,43 +66,58 @@ final class ShardStream(val name: String, val numShards: Int) {
   private final class Shard(val id: String, val parents: Seq[String]) {
     val buf = new ArrayBuffer[StoredRecord]
     var isSealed: Boolean = false
+    // arrival stamp of the newest record (monotone per shard)
+    var lastArrivalTs: Long = Long.MinValue
   }
 
-  private val shardList: ArrayBuffer[Shard] = {
-    val b = new ArrayBuffer[Shard]
-    (0 until numShards).foreach(i => b += new Shard(shardIdOf(i), Seq.empty))
-    b
-  }
+  // per-key state of one idempotent write scope: the high-water index
+  // and the sequence number it was appended at
+  private final class HighWater(var idx: Long, var seq: Long)
+
+  private val shardList = new ArrayBuffer[Shard]
+  private val shardById = new java.util.HashMap[String, Shard]()
+  // the open shards in shardList order — the routing table; only a
+  // split or merge changes it
+  private var openShards: Array[Shard] = Array.empty
   private var nextSeq: Long = 0L
   // last sequence number assigned per partitionKey (ordering chain)
   private val lastSeqForKey = new java.util.HashMap[String, Long]()
-  // exactly-once producer ledger: (scope, key) -> (high-water idx, seq
-  // of that idx). Scope = one logical write (job/epoch); a retried
-  // task replaying the same per-key index sequence is a no-op. The
-  // substrate keeps one entry per (scope, key); a real service keeps
-  // the same thing as a per-producer-epoch high-water (O(active keys),
-  // snapshotted with the log — the Kafka idempotent-producer design).
-  private val producerHighWater = new java.util.HashMap[(String, String), (Long, Long)]()
+  // exactly-once producer ledger: scope -> key -> high-water. Scope =
+  // one logical write (job/epoch); a retried task replaying the same
+  // per-key index sequence is a no-op. The substrate keeps one entry
+  // per (scope, key); a real service keeps the same thing as a
+  // per-producer-epoch high-water (O(active keys), snapshotted with
+  // the log — the Kafka idempotent-producer design).
+  private val producerHighWater = new java.util.HashMap[String, java.util.HashMap[String, HighWater]]()
+
+  (0 until numShards).foreach(i => addShard(new Shard(shardIdOf(i), Seq.empty)))
+  reroute()
 
   def shardIds: Seq[String] = synchronized { shardList.map(_.id).toSeq }
   def shardIdOf(i: Int): String = f"shardId-$i%012d"
-  private def shardOf(shardId: String): Shard =
-    shardList.find(_.id == shardId).getOrElse(
-      throw new ShardServiceException(s"unknown shard $shardId in stream $name"))
+
+  private def addShard(s: Shard): Unit = {
+    shardList += s
+    shardById.put(s.id, s)
+  }
+  private def reroute(): Unit = openShards = shardList.filter(!_.isSealed).toArray
+  private def shardOf(shardId: String): Shard = {
+    val s = shardById.get(shardId)
+    if (s == null) throw new ShardServiceException(s"unknown shard $shardId in stream $name")
+    s
+  }
 
   def isShardSealed(shardId: String): Boolean = synchronized { shardOf(shardId).isSealed }
   def parentsOf(shardId: String): Seq[String] = synchronized { shardOf(shardId).parents }
 
-  private def openShards: Seq[Shard] = shardList.filter(!_.isSealed).toSeq
+  private def route(partitionKey: String): Shard =
+    openShards(math.floorMod(MurmurHash3.stringHash(partitionKey, 42), openShards.length))
 
   /** Deterministic shard routing by partition key (murmur3, stable
     * across JVMs) — the role Kinesis' md5-of-key hashing plays. Routes
     * over the OPEN shards only, so after a split/merge a key's new
     * records land in a live child, never a sealed parent. */
-  def shardFor(partitionKey: String): String = synchronized {
-    val open = openShards
-    open(math.floorMod(MurmurHash3.stringHash(partitionKey, 42), open.size)).id
-  }
+  def shardFor(partitionKey: String): String = synchronized { route(partitionKey).id }
 
   /** Split `parentId`: seal it and open two children — the Kinesis
     * SplitShard lifecycle the reference's 1-shard assertion avoids.
@@ -112,8 +127,10 @@ final class ShardStream(val name: String, val numShards: Int) {
     if (p.isSealed) throw new ShardServiceException(s"shard $parentId is already sealed")
     p.isSealed = true
     val c1 = new Shard(shardIdOf(shardList.size), Seq(parentId))
-    val c2 = new Shard(shardIdOf(shardList.size + 1), Seq(parentId))
-    shardList += c1 += c2
+    addShard(c1)
+    val c2 = new Shard(shardIdOf(shardList.size), Seq(parentId))
+    addShard(c2)
+    reroute()
     (c1.id, c2.id)
   }
 
@@ -126,24 +143,22 @@ final class ShardStream(val name: String, val numShards: Int) {
       throw new ShardServiceException(s"cannot merge sealed shard(s) $aId/$bId")
     a.isSealed = true; b.isSealed = true
     val c = new Shard(shardIdOf(shardList.size), Seq(aId, bId))
-    shardList += c
+    addShard(c)
+    reroute()
     c.id
   }
 
   /** Append under the stream lock; enforces per-shard arrival-stamp
     * monotonicity (the real-service invariant AT_TIMESTAMP relies on). */
-  private def append(partitionKey: String, data: Array[Byte],
-                     arrivalTs: Option[Long]): Long = {
+  private def append(partitionKey: String, data: Array[Byte], arrivalTs: Long): Long = {
     val seq = nextSeq
-    val shard = shardOf(shardFor(partitionKey))
-    val ts = arrivalTs.getOrElse(seq) // logical clock default
-    shard.buf.lastOption.foreach { last =>
-      if (ts < last.arrivalTs)
-        throw new ShardServiceException(
-          s"arrival timestamp $ts regresses below ${last.arrivalTs} in shard ${shard.id}")
-    }
+    val shard = route(partitionKey)
+    if (arrivalTs < shard.lastArrivalTs)
+      throw new ShardServiceException(
+        s"arrival timestamp $arrivalTs regresses below ${shard.lastArrivalTs} in shard ${shard.id}")
     nextSeq += 1
-    shard.buf += StoredRecord(seq, partitionKey, data, ts)
+    shard.buf += StoredRecord(seq, partitionKey, data, arrivalTs)
+    shard.lastArrivalTs = arrivalTs
     lastSeqForKey.put(partitionKey, seq)
     seq
   }
@@ -163,36 +178,59 @@ final class ShardStream(val name: String, val numShards: Int) {
         throw new ShardServiceException(
           s"ordering violation for key $partitionKey: chained after $prev but last is $last")
     }
-    append(partitionKey, data, arrivalTs)
+    append(partitionKey, data, arrivalTs.getOrElse(nextSeq)) // logical clock default
   }
 
+  /** Idempotent producer append of one record — the n = 1 case of
+    * [[putIdempotentPage]]; returns its sequence number. */
+  def putIdempotent(scope: String, partitionKey: String, idx: Long, data: Array[Byte]): Long =
+    putIdempotentPage(scope, Array(partitionKey), Array(idx), Array(data), 1)(0)
+
   /** Idempotent producer append — the write-side exactly-once contract
-    * ([[ShardDataWriter]]): `idx` is the caller's per-(scope, key)
-    * running index, starting at 0 and contiguous. A replay of an
+    * ([[ShardDataWriter]]) for the first `n` entries of a page of
+    * records, in array order, under one acquisition of the stream lock.
+    * `idxs(i)` is the caller's per-(scope, key) running index for
+    * `keys(i)`, starting at 0 and contiguous. A replay of an
     * already-applied index (a retried/speculative Spark task re-running
     * the same sorted partition) is a no-op returning the original
     * sequence number, so the visible effect per (scope, key) chain is
     * exactly-once even though task delivery is at-least-once. Per-key
-    * ordering is chained internally under the same lock. */
-  def putIdempotent(scope: String, partitionKey: String, idx: Long,
-                    data: Array[Byte], arrivalTs: Option[Long] = None): Long =
-    synchronized {
-      ShardServiceRegistry.maybeFail(name, "putRecord")
-      val k = (scope, partitionKey)
-      val st = producerHighWater.get(k)
-      val hw = if (st == null) -1L else st._1
-      if (idx <= hw) {
-        if (idx == hw) st._2
-        else lastSeqForKey.getOrDefault(partitionKey, -1L) // older dup: chain tip
-      } else if (idx != hw + 1) {
-        throw new ShardServiceException(
-          s"producer gap for key $partitionKey in scope $scope: idx $idx after high-water $hw")
-      } else {
-        val seq = append(partitionKey, data, arrivalTs)
-        producerHighWater.put(k, (idx, seq))
-        seq
-      }
+    * ordering is chained internally under the same lock. Each record is
+    * one `putRecord` call to the failure seam; a failure mid-page keeps
+    * the records before it, which a retry then replays as no-ops.
+    * Returns the records' sequence numbers. */
+  def putIdempotentPage(scope: String, keys: Array[String], idxs: Array[Long],
+                        data: Array[Array[Byte]], n: Int): Array[Long] = synchronized {
+    var chains = producerHighWater.get(scope)
+    if (chains == null) {
+      chains = new java.util.HashMap[String, HighWater]()
+      producerHighWater.put(scope, chains)
     }
+    val seqs = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      ShardServiceRegistry.maybeFail(name, "putRecord")
+      val key = keys(i)
+      val idx = idxs(i)
+      val hw = chains.get(key)
+      val top = if (hw == null) -1L else hw.idx
+      seqs(i) =
+        if (hw != null && idx <= top) {
+          if (idx == top) hw.seq
+          else lastSeqForKey.getOrDefault(key, -1L) // older dup: chain tip
+        } else if (idx != top + 1)
+          throw new ShardServiceException(
+            s"producer gap for key $key in scope $scope: idx $idx after high-water $top")
+        else {
+          val seq = append(key, data(i), nextSeq)
+          if (hw == null) chains.put(key, new HighWater(idx, seq))
+          else { hw.idx = idx; hw.seq = seq }
+          seq
+        }
+      i += 1
+    }
+    seqs
+  }
 
   /** Number of records currently in a shard (the shard's end index). */
   def size(shardId: String): Long = synchronized { shardOf(shardId).buf.length.toLong }
@@ -284,13 +322,15 @@ object ShardServiceRegistry {
     oneShot.remove((stream, op))
   }
 
-  private[shard] def maybeFail(stream: String, op: String): Unit = {
-    val msg = failures.get((stream, op))
-    if (msg != null) throw new ShardServiceException(s"$op on $stream failed: $msg")
-    val counter = oneShot.get((stream, op))
-    if (counter != null && counter.getAndDecrement() == 0L) {
-      oneShot.remove((stream, op))
-      throw new ShardServiceException(s"$op on $stream failed: injected one-shot failure")
+  // the key tuples are only built while some fault is armed
+  private[shard] def maybeFail(stream: String, op: String): Unit =
+    if (!failures.isEmpty || !oneShot.isEmpty) {
+      val msg = failures.get((stream, op))
+      if (msg != null) throw new ShardServiceException(s"$op on $stream failed: $msg")
+      val counter = oneShot.get((stream, op))
+      if (counter != null && counter.getAndDecrement() == 0L) {
+        oneShot.remove((stream, op))
+        throw new ShardServiceException(s"$op on $stream failed: injected one-shot failure")
+      }
     }
-  }
 }

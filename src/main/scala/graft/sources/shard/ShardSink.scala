@@ -48,15 +48,17 @@ object ShardSink {
       .repartition(col("__key"))
       .sortWithinPartitions(col("__key") +: orderCols.map(col): _*)
     prepared.foreachPartition { (rows: Iterator[Row]) =>
-      // Executor-side: resolve the service locally (same JVM in
-      // local[*]; a cluster impl would open a client here).
-      val lastSeq = scala.collection.mutable.Map.empty[String, Long]
-      rows.foreach { r =>
-        val key = r.getString(0)
-        val payload = r.getAs[Array[Byte]](1)
-        val seq = ShardServiceRegistry.get(stream)
-          .putRecord(key, payload, lastSeq.get(key))
-        lastSeq(key) = seq
+      if (rows.hasNext) {
+        // Executor-side: resolve the service locally, once per
+        // partition (same JVM in local[*]; a cluster impl would open a
+        // client here).
+        val svc = ShardServiceRegistry.get(stream)
+        val lastSeq = scala.collection.mutable.Map.empty[String, Long]
+        rows.foreach { r =>
+          val key = r.getString(0)
+          val payload = r.getAs[Array[Byte]](1)
+          lastSeq(key) = svc.putRecord(key, payload, lastSeq.get(key))
+        }
       }
     }
   }

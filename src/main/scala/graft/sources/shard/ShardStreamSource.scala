@@ -68,8 +68,22 @@ object ShardStreamTable {
     StructField("partitionKey", StringType, nullable = false),
     StructField("data", BinaryType, nullable = true)))
 
-  /** Kinesis-style sequence string: zero-padded so lexical == numeric. */
-  def seqString(seq: Long): String = f"$seq%020d"
+  /** Kinesis-style sequence string: zero-padded to 20 digits so lexical
+    * == numeric — the `%020d` rendering, written out by hand for the
+    * non-negative sequence numbers the service assigns. */
+  def seqString(seq: Long): String =
+    if (seq < 0) f"$seq%020d"
+    else {
+      val digits = new Array[Char](20)
+      var v = seq
+      var i = 19
+      while (i >= 0) {
+        digits(i) = ('0' + v % 10).toChar
+        v /= 10
+        i -= 1
+      }
+      new String(digits)
+    }
 }
 
 final case class ShardSourceOptions(
@@ -393,7 +407,11 @@ class ShardPartitionReader(p: ShardInputPartition) extends PartitionReader[Inter
       val limit = math.min(pageSize.toLong, p.until - pos).toInt
       page = ShardServiceRegistry.get(p.stream).getRecords(p.shardId, pos, limit)
       pageIdx = 0
-      if (page.isEmpty) return false // range shrank (should not happen: log is append-only)
+      // the log is append-only, so a planned range can never shrink
+      if (page.isEmpty)
+        throw new ShardServiceException(
+          s"stream ${p.stream} shard ${p.shardId} has no records in [$pos, ${p.until}) " +
+            "although the read was planned over them")
     }
     current = page(pageIdx)
     pageIdx += 1

@@ -118,24 +118,52 @@ final case class ShardWriterFactory(opts: ShardSinkOptions, schema: StructType,
   * retried or speculative task — which replays the same sorted rows —
   * re-sends the same indexes and the service no-ops them. Keys are
   * disjoint across partitions (the write clusters on the key), so two
-  * healthy tasks never share a (scope, key). */
+  * healthy tasks never share a (scope, key).
+  *
+  * Rows are buffered into pages of [[ShardDataWriter.PageSize]] and each
+  * page is one [[ShardStream.putIdempotentPage]] call, i.e. one
+  * acquisition of the stream lock that all writer tasks share; the last
+  * partial page is put in `commit()`. */
 class ShardDataWriter(opts: ShardSinkOptions, schema: StructType, scope: String)
     extends DataWriter[InternalRow] {
+  import ShardDataWriter.PageSize
   private val keyIdx = schema.fieldIndex(opts.keyCol)
   private val payloadIdx = schema.fieldIndex(opts.payloadCol)
+  private val stream = ShardServiceRegistry.get(opts.stream)
   private val nextIdx = scala.collection.mutable.Map.empty[String, Long]
+  private val keys = new Array[String](PageSize)
+  private val idxs = new Array[Long](PageSize)
+  private val payloads = new Array[Array[Byte]](PageSize)
+  private var buffered = 0
 
   override def write(row: InternalRow): Unit = {
     val key = row.getUTF8String(keyIdx).toString
-    val payload = row.getBinary(payloadIdx)
     val idx = nextIdx.getOrElse(key, 0L)
-    ShardServiceRegistry.get(opts.stream).putIdempotent(scope, key, idx, payload)
+    keys(buffered) = key
+    idxs(buffered) = idx
+    payloads(buffered) = row.getBinary(payloadIdx)
+    buffered += 1
     nextIdx(key) = idx + 1
+    if (buffered == PageSize) flush()
   }
 
-  override def commit(): WriterCommitMessage = ShardWriteCommit(nextIdx.size)
-  override def abort(): Unit = ()
+  private def flush(): Unit = if (buffered > 0) {
+    stream.putIdempotentPage(scope, keys, idxs, payloads, buffered)
+    buffered = 0
+  }
+
+  override def commit(): WriterCommitMessage = {
+    flush()
+    ShardWriteCommit(nextIdx.size)
+  }
+  override def abort(): Unit = buffered = 0
   override def close(): Unit = ()
+}
+
+object ShardDataWriter {
+  /** Rows per put page: one stream-lock acquisition per this many
+    * rows (sized on perfbench `tail_openloop`). */
+  val PageSize = 512
 }
 
 final case class ShardWriteCommit(keysWritten: Int) extends WriterCommitMessage

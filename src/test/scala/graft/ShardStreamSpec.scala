@@ -740,32 +740,111 @@ class ShardStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("DSv2 write: a mid-write task failure retries to an exactly-once visible effect") {
+  /** Rows (key, i, payload "p-i") through `format("shardstream")`,
+    * ordered by `i` within each key. */
+  private def dsv2Write(rows: Seq[(String, Int)], stream: String): Unit = {
     val sp = spark
     import sp.implicits._
-    val name = freshName("retryw")
-    ShardServiceRegistry.create(name, 2)
-    val df = (0 until 40).map(i => (s"key-${i % 4}", i, s"p-$i"))
-      .toDF("k", "i", "payload")
+    rows.map { case (k, i) => (k, i, s"p-$i") }.toDF("k", "i", "payload")
       .select($"k", $"i", $"payload".cast("binary").as("payload"))
-    // 6th put throws once: some task dies mid-write after real appends,
-    // its retry replays the same sorted rows under the same scope
-    ShardServiceRegistry.injectFailureOnce(name, "putRecord", afterCalls = 5L)
-    try {
-      df.write.format("shardstream")
-        .option("stream", name).option("keyCol", "k")
-        .option("payloadCol", "payload").option("orderBy", "i")
-        .mode("append").save()
-    } finally ShardServiceRegistry.clearFailure(name, "putRecord")
-    val back = spark.read.format("shardstream").option("stream", name).load()
-      .select(col("partitionKey"), col("sequenceNumber"), col("data").cast("string").as("p"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
-    assert(back.length == 40, s"double-put or loss after retry: ${back.length} records")
-    back.groupBy(_._1).foreach { case (key, rs) =>
-      val inSeqOrder = rs.sortBy(_._2).map(_._3).toSeq
-      val expected = (0 until 40).filter(i => s"key-${i % 4}" == key).map(i => s"p-$i")
-      assert(inSeqOrder == expected, s"key $key order broken after retry")
+      .write.format("shardstream")
+      .option("stream", stream).option("keyCol", "k")
+      .option("payloadCol", "payload").option("orderBy", "i")
+      .mode("append").save()
+  }
+
+  /** shardId -> key -> payloads in sequence order. */
+  private def perShardKeyChains(s: ShardStream): Map[String, Map[String, Seq[String]]] =
+    s.shardIds.map { id =>
+      id -> s.getRecords(id, 0L, Int.MaxValue).groupBy(_.partitionKey)
+        .map { case (k, rs) => k -> rs.sortBy(_.seq).map(r => new String(r.data, UTF_8)) }
+    }.toMap
+
+  test("DSv2 write: a mid-write task failure retries to an exactly-once visible effect") {
+    // (rows, afterCalls): 40 rows over 4 keys with the 6th put failing,
+    // then one hot key (a single writer task) whose failing put lands
+    // mid-way through the first page and mid-way through the second
+    val page = ShardDataWriter.PageSize
+    val hot = (0 until 2 * page + 300).map(i => ("hot", i))
+    val cases = Seq(
+      (0 until 40).map(i => (s"key-${i % 4}", i)) -> 5L,
+      hot -> (page / 2).toLong,
+      hot -> (page + page / 3).toLong)
+    for ((rows, afterCalls) <- cases) {
+      val name = freshName("retryw")
+      ShardServiceRegistry.create(name, 2)
+      val failedTasks = new AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.reason != org.apache.spark.Success) failedTasks.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      // the (afterCalls+1)-th put throws once: the task dies mid-write
+      // after real appends, its retry replays the same sorted rows
+      // under the same scope
+      ShardServiceRegistry.injectFailureOnce(name, "putRecord", afterCalls)
+      try dsv2Write(rows, name)
+      finally ShardServiceRegistry.clearFailure(name, "putRecord")
+      val deadline = System.currentTimeMillis() + 10000
+      while (failedTasks.get() == 0 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      spark.sparkContext.removeSparkListener(listener)
+      assert(failedTasks.get() == 1, s"afterCalls=$afterCalls: the injected failure must kill one task")
+      val back = spark.read.format("shardstream").option("stream", name).load()
+        .select(col("partitionKey"), col("sequenceNumber"), col("data").cast("string").as("p"))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      assert(back.length == rows.size,
+        s"afterCalls=$afterCalls: double-put or loss after retry: ${back.length} records")
+      back.groupBy(_._1).foreach { case (key, rs) =>
+        val inSeqOrder = rs.sortBy(_._2).map(_._3).toSeq
+        val expected = rows.filter(_._1 == key).map(r => s"p-${r._2}")
+        assert(inSeqOrder == expected, s"afterCalls=$afterCalls: key $key order broken after retry")
+      }
     }
+  }
+
+  test("DSv2 write: paged puts equal a per-row putIdempotent replay of the sorted rows") {
+    // one hot key spanning several pages plus many small keys
+    val rnd = new scala.util.Random(7L)
+    val rows = rnd.shuffle(
+      (0 until 2 * ShardDataWriter.PageSize + 100).map(i => ("hot", i)) ++
+        (0 until 600).map(i => (s"small-${i % 200}", 10000 + i)))
+    val written = freshName("paged")
+    val replayed = freshName("perrow")
+    ShardServiceRegistry.create(written, 8)
+    val reference = ShardServiceRegistry.create(replayed, 8)
+    dsv2Write(rows, written)
+    rows.groupBy(_._1).foreach { case (k, rs) =>
+      rs.sortBy(_._2).zipWithIndex.foreach { case ((_, i), idx) =>
+        reference.putIdempotent("replay", k, idx.toLong, s"p-$i".getBytes(UTF_8))
+      }
+    }
+    val got = perShardKeyChains(ShardServiceRegistry.get(written))
+    assert(got.values.map(_.values.map(_.size).sum).sum == rows.size)
+    assert(got == perShardKeyChains(reference))
+  }
+
+  test("reader: a planned range past the shard's end fails loudly instead of truncating") {
+    val name = seeded10()
+    val shard = ShardServiceRegistry.get(name).shardIds.head
+    val reader = new ShardPartitionReader(ShardInputPartition(name, shard, 0L, 15L))
+    var rows = 0
+    val ex = intercept[ShardServiceException] {
+      while (reader.next()) { reader.get(); rows += 1 }
+    }
+    assert(rows == 10)
+    Seq(name, shard, "[10, 15)").foreach(part =>
+      assert(ex.getMessage.contains(part), s"'${ex.getMessage}' does not name $part"))
+  }
+
+  test("seqString zero-pads to 20 digits exactly like %020d") {
+    assert(ShardStreamTable.seqString(0L) == "00000000000000000000")
+    assert(ShardStreamTable.seqString(9L) == "00000000000000000009")
+    assert(ShardStreamTable.seqString(10L) == "00000000000000000010")
+    assert(ShardStreamTable.seqString(Long.MaxValue) == "09223372036854775807")
+    val rnd = new scala.util.Random(20L)
+    val samples = (0 to 18).map(e => math.pow(10, e).toLong).flatMap(p => Seq(p - 1, p, p + 1)) ++
+      Seq.fill(1000)(rnd.nextLong() & Long.MaxValue)
+    samples.foreach(v => assert(ShardStreamTable.seqString(v) == f"$v%020d", s"at $v"))
   }
 
   // ---- typed consumer dataflow (S14) --------------------------------
