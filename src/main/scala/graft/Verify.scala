@@ -32,9 +32,15 @@ object Verify {
       // dependents) would otherwise pin them for the whole run
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(keep))
+    spark.stop()
+  }
+
+  /** The oracle SQL of the kept queries as one JSON object (name → SQL),
+    * the input of tools/check_oracle.py. Escapes backslash, quote and
+    * ALL control chars (<0x20): a tab or CR in builder-authored SQL
+    * would otherwise make json.load fail. */
+  def oracleJson(keep: String => Boolean): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -44,9 +50,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
+    SparkEntry.oracleSql.filter(kv => keep(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

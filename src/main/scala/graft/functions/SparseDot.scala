@@ -45,12 +45,40 @@ case class SparseDot(left: Expression, right: Expression) extends BinaryExpressi
         s"arguments, got ${left.dataType.catalogString}, " +
         s"${right.dataType.catalogString}")
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SparseDot.merge(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  /** Whether a vector of this type can hold a null element or field. */
+  private def mayHoldNull(t: DataType): Boolean = t match {
+    case ArrayType(st: StructType, containsNull) =>
+      containsNull || st.fields.exists(_.nullable)
+    case _ => true
+  }
+
+  @transient private lazy val checkNulls: Boolean =
+    mayHoldNull(left.dataType) || mayHoldNull(right.dataType)
+
+  override def nullable: Boolean = super.nullable || checkNulls
+
+  /** A null element or a null field anywhere in either vector makes the
+    * product SQL NULL (the int_dot rule), instead of an NPE or a null
+    * read as 0 through getLong/getInt. */
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    if (checkNulls && (SparseDot.hasNull(x) || SparseDot.hasNull(y))) null
+    else SparseDot.merge(x, y)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SparseDot.merge($a, $b);")
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val merge = s"${ev.value} = graft.functions.SparseDot.merge($a, $b);"
+      if (!checkNulls) merge
+      else
+        s"""if (graft.functions.SparseDot.hasNull($a) ||
+           |    graft.functions.SparseDot.hasNull($b)) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  $merge
+           |}""".stripMargin
+    })
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): SparseDot =
@@ -58,6 +86,19 @@ case class SparseDot(left: Expression, right: Expression) extends BinaryExpressi
 }
 
 object SparseDot {
+  /** A null element, or an element with a null field. */
+  def hasNull(v: ArrayData): Boolean = {
+    var i = 0
+    val n = v.numElements()
+    while (i < n) {
+      if (v.isNullAt(i)) return true
+      val r = v.getStruct(i, 3)
+      if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) return true
+      i += 1
+    }
+    false
+  }
+
   /** Two-pointer merge; static so the interpreted and generated paths
     * share one implementation (the loop is the work). Overflow throws
     * (exact-arithmetic parity with ANSI-mode sum). */

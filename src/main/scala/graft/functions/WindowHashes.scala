@@ -107,18 +107,21 @@ object WindowHashes {
       val nc = s.numChars()
       if (nc < n) return new GenericArrayData(Array.emptyLongArray)
       val cps = new Array[Int](nc)
+      // a string that ends mid-sequence (or holds invalid lead bytes)
+      // must not read past either array: missing continuation bytes
+      // decode as 0, and decoding stops at numChars code points
+      def cont(k: Int): Int = if (k < nb) bytes(k) & 0x3f else 0
       var bi = 0; var ci = 0
-      while (bi < nb) {
+      while (bi < nb && ci < nc) {
         val b0 = bytes(bi) & 0xff
         if (b0 < 0x80) { cps(ci) = b0; bi += 1 }
         else if (b0 < 0xe0) {
-          cps(ci) = ((b0 & 0x1f) << 6) | (bytes(bi + 1) & 0x3f); bi += 2
+          cps(ci) = ((b0 & 0x1f) << 6) | cont(bi + 1); bi += 2
         } else if (b0 < 0xf0) {
-          cps(ci) = ((b0 & 0x0f) << 12) | ((bytes(bi + 1) & 0x3f) << 6) |
-            (bytes(bi + 2) & 0x3f); bi += 3
+          cps(ci) = ((b0 & 0x0f) << 12) | (cont(bi + 1) << 6) | cont(bi + 2); bi += 3
         } else {
-          cps(ci) = ((b0 & 0x07) << 18) | ((bytes(bi + 1) & 0x3f) << 12) |
-            ((bytes(bi + 2) & 0x3f) << 6) | (bytes(bi + 3) & 0x3f); bi += 4
+          cps(ci) = ((b0 & 0x07) << 18) | (cont(bi + 1) << 12) |
+            (cont(bi + 2) << 6) | cont(bi + 3); bi += 4
         }
         ci += 1
       }

@@ -3,6 +3,8 @@ package graft.operators
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
@@ -147,155 +149,223 @@ object Streams extends QueryPack {
     StructField("event_type", StringType),
     StructField("value", DoubleType)))
 
-  /** Shared seeding core: create `name` and append the (event_id,
-    * user_id, json) rows in event_id order, `times` puts per row
-    * (times > 1 models at-least-once duplicate delivery). Idempotent
-    * per stream within the JVM. partitionKey = user_id, so per-shard
-    * order is event_id order for the users routed there. Rows arrive
-    * as a LOCAL ITERATOR (Multimodal's toLocalIterator rule): the
-    * fixture scales with sf, so driver memory stays one-partition-
-    * bounded instead of materializing the whole table. */
-  private def seedRows(name: String, numShards: Int,
-                       rows: java.util.Iterator[org.apache.spark.sql.Row],
-                       times: Int): Unit =
-    synchronized {
-      if (ShardServiceRegistry.exists(name)) return
+  /** Seed stream `name` at most once per JVM from the columns of `rows`:
+    * (order key, partition key, payload), appended in order-key order,
+    * `times` puts per row (times > 1 models at-least-once duplicate
+    * delivery). The partition key pins a key to one shard, so per-shard
+    * order is order-key order. The whole check-and-seed holds the
+    * object lock: an unsynchronized exists() fast path would let a
+    * concurrent caller observe the stream mid-seed and read a partial
+    * fixture. Rows arrive as a local iterator, so driver memory stays
+    * one-partition-bounded at any sf. Returns `name`. */
+  private[operators] def fixture(name: String, numShards: Int, times: Int = 1)(
+      rows: => DataFrame): String = synchronized {
+    if (!ShardServiceRegistry.exists(name)) {
+      val df = rows
       val stream = ShardServiceRegistry.create(name, numShards)
-      rows.forEachRemaining { r =>
+      df.orderBy(df.columns.head).toLocalIterator().forEachRemaining { r =>
         require(!r.isNullAt(0) && !r.isNullAt(1),
-          s"seedRows($name): null event_id/user_id in events fixture: $r")
+          s"fixture($name): null order or partition key: $r")
+        val pk = r.get(1).toString
         val bytes = r.getString(2).getBytes(UTF_8)
         var i = 0
         while (i < times) {
-          stream.putRecord(r.getLong(1).toString, bytes, None)
+          stream.putRecord(pk, bytes, None)
           i += 1
         }
       }
     }
-
-  /** Seed a `numShards`-shard stream with the events table: payload =
-    * canonical JSON of the row. The whole check-and-seed holds the
-    * object lock (re-entrant with seedRows'): an unsynchronized
-    * exists() fast path would let a concurrent caller observe the
-    * stream mid-seed and read a partial fixture. */
-  private def seedEventsJson(s: SparkSession, dir: String, name: String,
-                             numShards: Int): Unit = synchronized {
-    if (ShardServiceRegistry.exists(name)) return
-    // to_json handles string escaping and null fields; hand-built
-    // concatenation would emit invalid JSON for quotes/NaN and
-    // silently coerce NULL to 0 via getLong/getDouble
-    val rows = T.events(s, dir)
-      .select(col("event_id"), col("user_id"),
-        to_json(struct(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("user_id"), col("event_type"), col("value"))).as("json"))
-      .orderBy("event_id").toLocalIterator()
-    seedRows(name, numShards, rows, times = 1)
+    name
   }
 
-  /** Single-shard fixture in the reference TCK's exact shape: constant
-    * partition key, payload = event_type bytes, strict append order
-    * (`ShardPublisherVerification.scala:42-52`). */
-  private def seedEventsSingleShard(s: SparkSession, dir: String, name: String): Unit =
-    synchronized {
-      if (ShardServiceRegistry.exists(name)) return
-      val stream = ShardServiceRegistry.create(name, 1)
-      T.events(s, dir)
-        .select(col("event_id"), col("event_type")).orderBy("event_id")
-        .toLocalIterator().forEachRemaining(r =>
-          stream.putRecord("partitionKey", r.getString(1).getBytes(UTF_8), None))
-    }
+  /** The events table as canonical JSON (to_json handles string
+    * escaping and null fields; hand-built concatenation would emit
+    * invalid JSON for quotes/NaN and coerce NULL to 0), keyed by
+    * user_id — the payload [[payloadSchema]] decodes. */
+  private def eventsJson(s: SparkSession, d: String): DataFrame =
+    T.events(s, d).select(col("event_id"), col("user_id"),
+      to_json(struct(col("event_id"), unix_micros(col("ts")).as("ts_us"),
+        col("user_id"), col("event_type"), col("value"))).as("json"))
 
-  /** The shared plumbing of the events-day monitor family (s44 SPRT,
-    * s54 Haar, s55 Wilson, s56 runs, s57 OBF — every experiment/series
-    * monitor whose input is the per-day event/purchase grid): seeds
-    * the ONE `events_sprt_<sf>` fixture at most once per JVM, clears
-    * the monitor's scratch root, and returns the parsed
-    * (day STRING, p LONG) micro-batch stream plus the batchId-keyed
-    * partial root. Factored (VERDICT r18 #3) because the five copies
-    * were byte-identical and one drifting would silently split a
-    * monitor from the batch oracle that gates it.
+  /** The 4-shard events fixture most event queries share. */
+  private def eventsRt(s: SparkSession, d: String): String =
+    fixture(s"events_rt_${sfx(d)}", 4)(eventsJson(s, d))
+
+  /** Open `stream` from trim_horizon with `cap` records per micro-batch
+    * and decode each record's JSON payload into `schema`'s columns. */
+  private[operators] def jsonStream(s: SparkSession, stream: String, cap: Long,
+                                    schema: StructType): DataFrame =
+    s.readStream.format("shardstream")
+      .option("stream", stream)
+      .option("startingPosition", "trim_horizon")
+      .option("maxRecordsPerBatch", cap.toString)
+      .load()
+      .select(from_json(col("data").cast("string"), schema).as("e"))
+      .select("e.*")
+
+  /** A fresh scratch directory `/tmp/graft_<tag>_<sfx>_<appId>`: cleared
+    * before use, and keyed by applicationId so concurrent runs against
+    * the same dataset never share one. */
+  private def scratch(s: SparkSession, d: String, tag: String): String = {
+    val root = s"/tmp/graft_${tag}_${sfx(d)}_" +
+      s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
+    val path = new org.apache.hadoop.fs.Path(root)
+    path.getFileSystem(s.sparkContext.hadoopConfiguration).delete(path, true)
+    root
+  }
+
+  /** Writes one micro-batch's partials: `emit(name, df)`. */
+  private[operators] type Emit = (String, DataFrame) => Unit
+
+  /** The mergeable-monitor drain (the incremental aggregation model:
+    * every micro-batch writes linear or semilattice partials, merged
+    * after the drain). Runs `in` under Trigger.AvailableNow; each batch
+    * is handed to `perBatch` with an [[Emit]] that writes partial
+    * `name` to `<scratch>/<name>/b<batchId>` with overwrite, so an
+    * at-least-once replay of a batch rewrites its own partial and the
+    * union counts it once. Returns each partial's union over all
+    * batches, read back with the schema it was written with (captured
+    * on the driver at the first write). The merge and the fold stay
+    * with the caller. `stream` names the input in the errors raised
+    * when it yields no batch or a requested partial was never written. */
+  private[operators] def monitor(s: SparkSession, d: String, tag: String,
+      stream: String, in: DataFrame)(
+      perBatch: (DataFrame, Emit) => Unit): Map[String, DataFrame] = {
+    val root = scratch(s, d, tag)
+    val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+    graft.streaming.StreamObservability.attach(s)
+    in.writeStream.outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        perBatch(batch, (name, df) => {
+          schemas.putIfAbsent(name, df.schema)
+          df.write.mode("overwrite").parquet(s"$root/$name/b$batchId")
+        })
+      }.start().awaitTermination()
+    def missing(what: String): Nothing = throw new IllegalStateException(
+      s"monitor '$tag': stream '$stream' $what")
+    if (schemas.isEmpty) missing("yielded no micro-batch, so no partial was written")
+    schemas.asScala.map { case (name, schema) =>
+      name -> s.read.schema(schema).parquet(s"$root/$name/b*")
+    }.toMap.withDefault(name => missing(s"wrote no partial '$name'"))
+  }
+
+  /** The events-day input of the experiment/series monitors (s44 SPRT,
+    * s54 Haar, s55 Wilson, s56 runs, s57 OBF): one shared fixture and
+    * the parsed (day STRING, p LONG) micro-batch stream, so no monitor
+    * can drift from the batch oracle that gates it.
     *
     * Day is a CALENDAR date string (to_date), not a truncated
     * epoch-day long: the batch oracles use CAST(ts AS DATE), and
     * epoch-day `div` truncates toward zero (wrong bucket for pre-1970
     * ts) and only matches calendar days under UTC. */
-  private def eventsDayMonitor(s: SparkSession, d: String,
-                               tag: String): (DataFrame, String) = {
-    val name = s"events_sprt_${sfx(d)}"
-    synchronized {
-      if (!ShardServiceRegistry.exists(name)) {
-        val rows = T.events(s, d)
-          .select(col("event_id"), col("event_id").as("pk"),
-            to_json(struct(
-              to_date(col("ts")).cast("string").as("day"),
-              (col("event_type") === "purchase").cast("long").as("p")))
-              .as("json"))
-          .orderBy("event_id").toLocalIterator()
-        seedRows(name, numShards = 2, rows, times = 1)
-      }
+  private def eventsDays(s: SparkSession, d: String): (String, DataFrame) = {
+    val name = fixture(s"events_sprt_${sfx(d)}", 2) {
+      T.events(s, d).select(col("event_id"), col("event_id").as("pk"),
+        to_json(struct(to_date(col("ts")).cast("string").as("day"),
+          (col("event_type") === "purchase").cast("long").as("p"))).as("json"))
     }
-    val nEv = T.events(s, d).count()
-    val cap = math.max(10L, nEv / 4)
-    val root = s"/tmp/graft_${tag}_${sfx(d)}" +
-      s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    val eSchema = StructType(Seq(
-      StructField("day", StringType), StructField("p", LongType)))
-    val raw = s.readStream.format("shardstream")
-      .option("stream", name)
-      .option("startingPosition", "trim_horizon")
-      .option("maxRecordsPerBatch", cap.toString)
-      .load()
-      .select(from_json(col("data").cast("string"), eSchema).as("e"))
-      .select(col("e.day").as("day"), col("e.p").as("p"))
-    graft.streaming.StreamObservability.attach(s)
-    (raw, root)
+    val cap = math.max(10L, T.events(s, d).count() / 4)
+    (name, jsonStream(s, name, cap, StructType(Seq(
+      StructField("day", StringType), StructField("p", LongType)))))
   }
 
-  /** The documents fixture shared by the text/media monitor family
-    * (s52 LIX, s53 entropy, s60 scene cuts): one JSON record per doc
-    * carrying (doc_id, source, text), seeded at most once per JVM —
-    * factored on the eventsDayMonitor no-drift rule. Consumers parse
-    * the fields they need (from_json ignores the rest). */
-  private def docsLixFixture(s: SparkSession, d: String): String = {
-    val name = s"docs_lix_${sfx(d)}"
-    synchronized {
-      if (!ShardServiceRegistry.exists(name)) {
-        val rows = T.documents(s, d)
-          .select(col("doc_id"), col("doc_id").as("pk"),
-            to_json(struct(col("doc_id"), col("source"), col("text")))
-              .as("json"))
-          .orderBy("doc_id").toLocalIterator()
-        seedRows(name, numShards = 2, rows, times = 1)
-      }
+  /** The documents fixture of the text/media monitors (s52 LIX, s53
+    * entropy, s60 scene cuts): one JSON record per doc carrying
+    * (doc_id, source, text); consumers decode the fields they need. */
+  private def docsLix(s: SparkSession, d: String): String =
+    fixture(s"docs_lix_${sfx(d)}", 2) {
+      T.documents(s, d).select(col("doc_id"), col("doc_id").as("pk"),
+        to_json(struct(col("doc_id"), col("source"), col("text"))).as("json"))
     }
-    name
+
+  /** The orders-profile input of the s48 (audit) and s59
+    * (registers-only) profile monitors: the four profiled columns,
+    * decoded from one shared fixture. */
+  private def ordersProf(s: SparkSession, d: String): (String, DataFrame) = {
+    val name = fixture(s"orders_prof_${sfx(d)}", 2) {
+      T.orders(s, d).select(col("o_orderkey"), col("o_orderkey").as("pk"),
+        to_json(struct(
+          col("o_custkey").cast("long").as("ck"),
+          col("o_orderstatus").as("st"),
+          graft.functions.Exact.cents(col("o_totalprice")).as("pc"),
+          unix_timestamp(col("o_orderdate")).as("ep"))).as("json"))
+    }
+    val cap = math.max(50L, T.orders(s, d).count() / 4)
+    (name, jsonStream(s, name, cap, StructType(Seq(
+      StructField("ck", LongType), StructField("st", StringType),
+      StructField("pc", LongType), StructField("ep", LongType)))))
   }
 
-  /** The orders-profile fixture shared by the s48 (audit) and s59
-    * (registers-only production) profile monitors: one JSON record per
-    * order carrying the four profiled columns, seeded at most once per
-    * JVM. Factored for the same no-drift reason as
-    * [[eventsDayMonitor]]. */
-  private def ordersProfFixture(s: SparkSession, d: String): String = {
-    val name = s"orders_prof_${sfx(d)}"
-    synchronized {
-      if (!ShardServiceRegistry.exists(name)) {
-        val rows = T.orders(s, d)
-          .select(col("o_orderkey"), col("o_orderkey").as("pk"),
-            to_json(struct(
-              col("o_custkey").cast("long").as("ck"),
-              col("o_orderstatus").as("st"),
-              graft.functions.Exact.cents(col("o_totalprice")).as("pc"),
-              unix_timestamp(col("o_orderdate")).as("ep"))).as("json"))
-          .orderBy("o_orderkey").toLocalIterator()
-        seedRows(name, numShards = 2, rows, times = 1)
-      }
-    }
-    name
+  /** A profile batch's one-row stats partial: row count and per-column
+    * null count, min and max. */
+  private def profileStats(batch: DataFrame): DataFrame = batch.agg(
+    count(lit(1)).cast("long").as("n_rows"),
+    sum(col("ck").isNull.cast("long")).cast("long").as("ck_nulls"),
+    min(col("ck")).as("ck_min"), max(col("ck")).as("ck_max"),
+    sum(col("st").isNull.cast("long")).cast("long").as("st_nulls"),
+    min(col("st")).as("st_min"), max(col("st")).as("st_max"),
+    sum(col("pc").isNull.cast("long")).cast("long").as("pc_nulls"),
+    min(col("pc")).as("pc_min"), max(col("pc")).as("pc_max"),
+    sum(col("ep").isNull.cast("long")).cast("long").as("ep_nulls"),
+    min(col("ep")).as("ep_min"), max(col("ep")).as("ep_max"))
+
+  /** A profile batch's non-null values as (col_name, val) strings. */
+  private def profileValues(batch: DataFrame): DataFrame =
+    batch.selectExpr(
+      "stack(4, 'o_custkey', CAST(ck AS STRING)," +
+        " 'o_orderstatus', st," +
+        " 'o_totalprice_cents', CAST(pc AS STRING)," +
+        " 'o_orderdate_epoch_s', CAST(ep AS STRING))" +
+        " AS (col_name, val)")
+      .filter(col("val").isNotNull)
+
+  /** q214's per-column HLL register partial over (col_name, val). */
+  private def profileRegisters(values: DataFrame): DataFrame =
+    Sketches.hllRegisterRows(values.select(col("col_name"),
+      graft.functions.PortableHash.h60(col("val")).as("h")), "col_name")
+
+  /** The merged profile: stats partials summed/min/maxed into one row
+    * per column (n_rows, col_name, n_nulls, min_s, max_s), joined to
+    * the q214 estimate over the register-max of the HLL partials. */
+  private def profileReport(st: DataFrame, hll: DataFrame): DataFrame = {
+    val wide = st.agg(sum(col("n_rows")).cast("bigint").as("n_rows"),
+      sum(col("ck_nulls")).cast("bigint").as("ck_nulls"),
+      min(col("ck_min")).cast("string").as("ck_min"),
+      max(col("ck_max")).cast("string").as("ck_max"),
+      sum(col("st_nulls")).cast("bigint").as("st_nulls"),
+      min(col("st_min")).as("st_min"), max(col("st_max")).as("st_max"),
+      sum(col("pc_nulls")).cast("bigint").as("pc_nulls"),
+      min(col("pc_min")).cast("string").as("pc_min"),
+      max(col("pc_max")).cast("string").as("pc_max"),
+      sum(col("ep_nulls")).cast("bigint").as("ep_nulls"),
+      min(col("ep_min")).cast("string").as("ep_min"),
+      max(col("ep_max")).cast("string").as("ep_max"))
+    val est = Sketches.hllEstimate(
+      hll.groupBy(col("col_name"), col("j")).agg(max(col("reg")).as("reg")),
+      "col_name")
+      .withColumnRenamed("est_hll", "ndv_hll")
+    wide.selectExpr("n_rows",
+      """stack(4,
+        |  'o_custkey',           ck_nulls, ck_min, ck_max,
+        |  'o_orderstatus',       st_nulls, st_min, st_max,
+        |  'o_totalprice_cents',  pc_nulls, pc_min, pc_max,
+        |  'o_orderdate_epoch_s', ep_nulls, ep_min, ep_max
+        |) AS (col_name, n_nulls, min_s, max_s)""".stripMargin)
+      .join(est, "col_name")
   }
+
+  /** One JSON record per document — (doc_id, text) — keyed by doc_id,
+    * over the documents `keep` selects. */
+  private def docsText(s: SparkSession, d: String, keep: org.apache.spark.sql.Column): DataFrame =
+    T.documents(s, d).filter(keep).select(col("doc_id"), col("doc_id").as("pk"),
+      to_json(struct(col("doc_id"), col("text"))).as("json"))
+
+  private val docTextSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType)))
+
+  private val docsSourceSchema = StructType(Seq(
+    StructField("source", StringType), StructField("text", StringType)))
 
   /** Run a streaming DataFrame through Trigger.AvailableNow into a
     * memory sink and return the materialized table (S9 completion).
@@ -335,39 +405,43 @@ object Streams extends QueryPack {
     val cur = s26Ckpts.get(k)
     if (cur != null) cur
     else {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01/s04
-      seedEventsJson(s, d, name, numShards = 4)
-      val ckpt = s"/tmp/graft_ckpt_s26_${sfx(d)}_" +
-        s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val ckptPath = new org.apache.hadoop.fs.Path(ckpt)
-      val fs = ckptPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(ckptPath)) fs.delete(ckptPath, true)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val agg = raw.select(
-          from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(timestamp_micros(col("e.ts_us")).as("ts"),
-          col("e.event_type"))
+      val ckpt = scratch(s, d, "ckpt_s26")
+      val agg = jsonStream(s, eventsRt(s, d), 50000L, payloadSchema)
+        .select(timestamp_micros(col("ts_us")).as("ts"), col("event_type"))
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
       s.catalog.dropTempView("shardstream_state_out")
-      val q = agg.writeStream.format("memory")
+      agg.writeStream.format("memory")
         .queryName("shardstream_state_out")
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .awaitTermination()
       s26Ckpts.put(k, ckpt)
       ckpt
     }
   }
 
-  /** Shuffle-partition count scoped to the declared streaming class
-    * (VERDICT r17 #3). The measured s00 floor is per-PARTITION state
+  /** Clicks ⋈ purchases by the same user within 10 minutes, both sides
+    * replayed from the shared events fixture in one micro-batch and
+    * watermarked 1 hour (s06, s15, s23). */
+  private def clickPurchase(s: SparkSession, d: String, joinType: String): DataFrame = {
+    val name = eventsRt(s, d)
+    def side(et: String, pfx: String): DataFrame =
+      jsonStream(s, name, 10000000L, payloadSchema)
+        .filter(col("event_type") === et)
+        .select(col("user_id").as(s"${pfx}_user"),
+          timestamp_micros(col("ts_us")).as(s"${pfx}_ts"),
+          col("event_id").as(s"${pfx}_eid"))
+        .withWatermark(s"${pfx}_ts", "1 hour")
+    side("click", "c").join(side("purchase", "p"),
+      expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes"),
+      joinType)
+  }
+
+  /** Shuffle-partition count scoped to the declared streaming class.
+    * The measured s00 floor is per-PARTITION state
     * admin — 32 shuffle partitions × HDFSBackedStateStore open+commit
     * × epochs — so at fixture scale most of it is empty-partition
     * overhead. Measured on s00 (sf0.01, warmed, 3 reps each):
@@ -408,11 +482,10 @@ object Streams extends QueryPack {
 
   private def rawQueries: Map[String, (SparkSession, String) => DataFrame] =
     Map[String, (SparkSession, String) => DataFrame](
-    // ---- s00: null-stream epoch-floor baseline (VERDICT r16 #1) ------
+    // ---- s00: null-stream epoch-floor baseline -----------------------
     // The streaming class's bench lines carry a per-stream FIXED cost
-    // that whipsawed 0.3×→1.67× across r14–r16 on UNCHANGED code,
-    // forcing re-time adjudications every round. s00 measures that
-    // floor directly: a fixed 8-row fixture (sf-INDEPENDENT — the
+    // that swings widely on unchanged code. s00 measures that floor
+    // directly: a fixed 8-row fixture (sf-INDEPENDENT — the
     // payload never reads the tables) through the full declared-query
     // protocol — shardstream source, multiple epochs
     // (maxRecordsPerBatch=4), a checkpointed STATEFUL aggregation (one
@@ -424,61 +497,40 @@ object Streams extends QueryPack {
     // floor instead of buried in a mixed median.
     "s00_stream_epoch_floor" -> ((s, d) => {
       import s.implicits._
-      val name = s"floor_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val stream = ShardServiceRegistry.create(name, 2)
-          (0 until 8).foreach { i =>
-            val k = s"k${i % 4}"
-            stream.putRecord(k, s"""{"k":"$k"}""".getBytes(UTF_8), None)
-          }
-        }
+      // 8 records, 2 per key k0..k3
+      val name = fixture(s"floor_${sfx(d)}", 2) {
+        s.range(8).select(col("id"), concat(lit("k"), col("id") % 4).as("k"))
+          .select(col("id"), col("k"), to_json(struct(col("k"))).as("json"))
       }
       // memory sink cannot resume a checkpoint (s26's rule) — fresh dir
-      val ckpt = s"/tmp/graft_ckpt_s00_${sfx(d)}_" +
-        s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val ckptPath = new org.apache.hadoop.fs.Path(ckpt)
-      val fs = ckptPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(ckptPath)) fs.delete(ckptPath, true)
-      val kSchema = StructType(Seq(StructField("k", StringType)))
-      val counts = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "4")
-        .load()
-        .select(from_json(col("data").cast("string"), kSchema).as("e"))
-        .select(col("e.k").as("k"))
+      val ckpt = scratch(s, d, "ckpt_s00")
+      val counts = jsonStream(s, name, 4L,
+          StructType(Seq(StructField("k", StringType))))
         .groupBy(col("k")).agg(count(lit(1)).as("n"))
       graft.streaming.StreamObservability.attach(s)
       s.catalog.dropTempView("s00_floor_out")
-      val q = counts.writeStream.format("memory").queryName("s00_floor_out")
+      counts.writeStream.format("memory").queryName("s00_floor_out")
         .outputMode("complete")
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .awaitTermination()
       s.table("s00_floor_out").select($"k", $"n".cast("bigint").as("n"))
     }),
 
     // S1+S3+S4+S7+S16: multi-shard replay, JSON decode, full round-trip.
     "s01_stream_roundtrip" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}"
-      seedEventsJson(s, d, name, numShards = 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      drain(s, raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select("e.event_id", "e.ts_us", "e.user_id", "e.event_type", "e.value"))
+      drain(s, jsonStream(s, eventsRt(s, d), 50000L, payloadSchema))
     }),
 
     // S8+S9+S14: finite take-N with UTF-8 decode — the reference's own
     // demo dataflow `take(3).map(new String(data))`
     // (ShardProducerSpec.scala:40-44), N=5 here.
     "s02_stream_take_n" -> ((s, d) => {
-      val name = s"events_1shard_${sfx(d)}"
-      seedEventsSingleShard(s, d, name)
+      // the reference TCK's shape: one shard, constant partition key,
+      // payload = event_type bytes (ShardPublisherVerification.scala:42-52)
+      val name = fixture(s"events_1shard_${sfx(d)}", 1) {
+        T.events(s, d).select(col("event_id"), lit("partitionKey"), col("event_type"))
+      }
       val raw = s.readStream.format("shardstream")
         .option("stream", name)
         .option("startingPosition", "trim_horizon")
@@ -494,17 +546,8 @@ object Streams extends QueryPack {
     // emission — must equal the batch predicate "windows closed by the
     // final watermark". The oracle states that predicate directly.
     "s04_stream_windowed" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val events = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(timestamp_micros(col("e.ts_us")).as("ts"), col("e.event_type"))
-      val agg = events
+      val agg = jsonStream(s, eventsRt(s, d), 50000L, payloadSchema)
+        .select(timestamp_micros(col("ts_us")).as("ts"), col("event_type"))
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -554,17 +597,8 @@ object Streams extends QueryPack {
     // second query reading back the first sink — one shuffle per
     // level, state bounded by open windows per level.
     "s22_chained_windows" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01/s04
-      seedEventsJson(s, d, name, numShards = 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val events = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(timestamp_micros(col("e.ts_us")).as("ts"), col("e.event_type"))
-      val hourly = events
+      val hourly = jsonStream(s, eventsRt(s, d), 50000L, payloadSchema)
+        .select(timestamp_micros(col("ts_us")).as("ts"), col("event_type"))
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -590,22 +624,7 @@ object Streams extends QueryPack {
     // join state keyed by user, agg state bounded by open hours —
     // instead of landing the join to storage and re-aggregating.
     "s23_join_then_window" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01/s06
-      seedEventsJson(s, d, name, numShards = 4)
-      def side(et: String, pfx: String): DataFrame =
-        s.readStream.format("shardstream")
-          .option("stream", name)
-          .option("startingPosition", "trim_horizon")
-          .option("maxRecordsPerBatch", "10000000")
-          .load()
-          .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
-          .filter(col("e.event_type") === et)
-          .select(col("e.user_id").as(s"${pfx}_user"),
-            timestamp_micros(col("e.ts_us")).as(s"${pfx}_ts"),
-            col("e.event_id").as(s"${pfx}_eid"))
-          .withWatermark(s"${pfx}_ts", "1 hour")
-      val joined = side("click", "c").join(side("purchase", "p"),
-        expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes"))
+      val joined = clickPurchase(s, d, "inner")
       // distinct aggregates are unsupported in streaming, and a
       // collect_set surrogate accumulates an UNBOUNDED per-window agg
       // buffer (the r11 verdict's s23 hazard). Instead: chained
@@ -639,8 +658,8 @@ object Streams extends QueryPack {
     // a window's end — so the declared result is the COMPLEMENT of
     // s04's closure predicate and the oracle states it directly on
     // the batch table (windows whose end is PAST the final
-    // watermark). The checkpoint is built ONCE per (session, dir) —
-    // VERDICT r12 #4: at 100 TB the checkpoint PRE-EXISTS (it is the
+    // watermark). The checkpoint is built ONCE per (session, dir): at
+    // 100 TB the checkpoint PRE-EXISTS (it is the
     // artifact of the production query being debugged); re-draining
     // the stream per introspection call measured the drain, not the
     // read. The drained trajectory is deterministic, so the memoized
@@ -656,8 +675,8 @@ object Streams extends QueryPack {
     }),
 
     // ---- S4 PROVEN END-TO-END: exactly-once across a restart --------
-    // The claim the whole checkpointed-offset design exists for
-    // (VERDICT r12 #1): the reference keeps its cursor IN MEMORY
+    // The claim the whole checkpointed-offset design exists for: the
+    // reference keeps its cursor IN MEMORY
     // (`ShardSubscription.java:39`) — a consumer crash silently
     // re-delivers or loses records. This engine's upgrade (S4: durable
     // checkpointed offsets + the file sink's transactional metadata
@@ -688,30 +707,22 @@ object Streams extends QueryPack {
     // Parallel multi-shard admission is s01–s05/s17's subject; this
     // query's subject is the restart boundary.
     "s28_crash_recovery" -> ((s, d) => {
-      val name = s"events_1shard_json_${sfx(d)}"
-      seedEventsJson(s, d, name, numShards = 1)
-      val app = s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")
-      val ckpt = s"/tmp/graft_ckpt_s28_${sfx(d)}_$app"
-      val out = s"/tmp/graft_out_s28_${sfx(d)}_$app"
-      for (p <- Seq(ckpt, out)) {
-        val path = new org.apache.hadoop.fs.Path(p)
-        val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(path)) fs.delete(path, true)
-      }
+      val name = fixture(s"events_1shard_json_${sfx(d)}", 1)(eventsJson(s, d))
+      val ckpt = scratch(s, d, "ckpt_s28")
+      val out = scratch(s, d, "out_s28")
       // loop-control scalars: where "mid-stream" sits, and a per-batch
       // cap derived from the fixture so the epoch count stays bounded
       // at every sf (the s10 rule) — run 1 is ~2 micro-batches
       val total = T.events(s, d).count()
       val half = math.max(1L, total / 2)
       def run(maxElements: Long): Unit = {
-        val raw = s.readStream.format("shardstream")
+        val agg = s.readStream.format("shardstream")
           .option("stream", name)
           .option("startingPosition", "trim_horizon")
           .option("maxRecordsPerBatch", math.max(1L, half / 2).toString)
           .option("maxElements", maxElements.toString)
           .load()
-        val agg = raw.select(
-            from_json(col("data").cast("string"), payloadSchema).as("e"))
+          .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
           .select(timestamp_micros(col("e.ts_us")).as("ts"),
             col("e.event_type"))
           .withWatermark("ts", "10 minutes")
@@ -719,12 +730,12 @@ object Streams extends QueryPack {
           .agg(count(lit(1)).as("n"))
           .select(unix_timestamp(col("window.start")).as("start_s"),
             col("event_type"), col("n"))
-        val q = agg.writeStream.format("parquet")
+        agg.writeStream.format("parquet")
           .option("path", out)
           .option("checkpointLocation", ckpt)
           .outputMode("append")
           .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          .awaitTermination()
       }
       run(half) // stop mid-stream: offsets committed roughly halfway
       run(-1L)  // restart from the SAME checkpoint; drain to the end
@@ -749,16 +760,8 @@ object Streams extends QueryPack {
         .agg(min(col("delay_us"))).head()
       val delayUs =
         if (zeroLoss.isNullAt(0)) 3600000000L else zeroLoss.getLong(0)
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01/s04
-      seedEventsJson(s, d, name, numShards = 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val agg = raw.select(
-          from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(timestamp_micros(col("e.ts_us")).as("ts"), col("e.event_type"))
+      val agg = jsonStream(s, eventsRt(s, d), 50000L, payloadSchema)
+        .select(timestamp_micros(col("ts_us")).as("ts"), col("event_type"))
         .withWatermark("ts", s"${delayUs / 1000000L} seconds")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
@@ -784,22 +787,14 @@ object Streams extends QueryPack {
     // built-in operator's buffer.
     "s27_timer_windows" -> ((s, d) => {
       import s.implicits._
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01/s04
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val zeroLoss = Events.watermarkLateness(s, d)
         .filter(col("n_dropped") === 0)
         .agg(min(col("delay_us"))).head()
       val delayUs =
         if (zeroLoss.isNullAt(0)) 3600000000L else zeroLoss.getLong(0)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val ev = raw.select(
-          from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(timestamp_micros(col("e.ts_us")).as("ts"),
-          col("e.user_id").as("user_id"), col("e.ts_us").as("ts_us"))
+      val ev = jsonStream(s, name, 50000L, payloadSchema)
+        .select(timestamp_micros(col("ts_us")).as("ts"), col("user_id"), col("ts_us"))
         .withWatermark("ts", s"${delayUs / 1000000L} seconds")
         .select(col("user_id"), col("ts_us"))
         .as[(Long, Long)]
@@ -826,29 +821,20 @@ object Streams extends QueryPack {
     // interleaves shard ranges — per-key order would still hold per
     // epoch, but min/max-vs-seq would not be oracle-checkable).
     "s05_dsv2_sink_pipe" -> ((s, d) => {
-      val src = s"events_rt_${sfx(d)}"
-      seedEventsJson(s, d, src, numShards = 4)
       val dst = s"events_pipe_${sfx(d)}"
       ShardServiceRegistry.drop(dst)
       ShardServiceRegistry.create(dst, 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", src)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "10000000")
-        .load()
-      val parsed = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(col("e.event_type").as("partitionKey"),
-          col("e.event_id"),
-          col("e.event_id").cast("string").cast("binary").as("data"))
+      val parsed = jsonStream(s, eventsRt(s, d), 10000000L, payloadSchema)
+        .select(col("event_type").as("partitionKey"), col("event_id"),
+          col("event_id").cast("string").cast("binary").as("data"))
       graft.streaming.StreamObservability.attach(s)
-      val q = parsed.writeStream.format("shardstream")
+      parsed.writeStream.format("shardstream")
         .option("stream", dst)
         .option("orderBy", "event_id")
         .option("checkpointLocation",
           java.nio.file.Files.createTempDirectory("graft_pipe").toString)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .awaitTermination()
       s.read.format("shardstream").option("stream", dst).load()
         .select(col("partitionKey").as("event_type"), col("sequenceNumber"),
           col("data").cast("string").cast("bigint").as("eid"))
@@ -866,23 +852,7 @@ object Streams extends QueryPack {
     // emit eagerly on match, so append-mode output equals the batch
     // join — the oracle states that batch predicate.
     "s06_stream_stream_join" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
-      def side(et: String, pfx: String): DataFrame =
-        s.readStream.format("shardstream")
-          .option("stream", name)
-          .option("startingPosition", "trim_horizon")
-          .option("maxRecordsPerBatch", "10000000")
-          .load()
-          .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
-          .filter(col("e.event_type") === et)
-          .select(col("e.user_id").as(s"${pfx}_user"),
-            timestamp_micros(col("e.ts_us")).as(s"${pfx}_ts"),
-            col("e.event_id").as(s"${pfx}_eid"))
-          .withWatermark(s"${pfx}_ts", "1 hour")
-      val joined = side("click", "c").join(side("purchase", "p"),
-        expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes"))
-      drain(s, joined.select(col("c_eid"), col("p_eid")))
+      drain(s, clickPurchase(s, d, "inner").select(col("c_eid"), col("p_eid")))
     }),
 
     // Stream-stream LEFT OUTER join: matches emit immediately; an
@@ -895,24 +865,7 @@ object Streams extends QueryPack {
     // minus unmatched rows whose window was still open at the end —
     // the same watermark-closure reasoning as s04's HAVING clause.
     "s15_stream_outer_join" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01/s06
-      seedEventsJson(s, d, name, numShards = 4)
-      def side(et: String, pfx: String): DataFrame =
-        s.readStream.format("shardstream")
-          .option("stream", name)
-          .option("startingPosition", "trim_horizon")
-          .option("maxRecordsPerBatch", "10000000")
-          .load()
-          .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
-          .filter(col("e.event_type") === et)
-          .select(col("e.user_id").as(s"${pfx}_user"),
-            timestamp_micros(col("e.ts_us")).as(s"${pfx}_ts"),
-            col("e.event_id").as(s"${pfx}_eid"))
-          .withWatermark(s"${pfx}_ts", "1 hour")
-      val joined = side("click", "c").join(side("purchase", "p"),
-        expr("c_user = p_user AND p_ts >= c_ts AND p_ts <= c_ts + interval 10 minutes"),
-        "left_outer")
-      drain(s, joined.select(col("c_eid"), col("p_eid")))
+      drain(s, clickPurchase(s, d, "left_outer").select(col("c_eid"), col("p_eid")))
     }),
 
     // Watermark-BOUNDED streaming dedup (dropDuplicatesWithinWatermark)
@@ -924,26 +877,10 @@ object Streams extends QueryPack {
     // always land within the window and the drained output equals the
     // batch DISTINCT regardless of where epoch boundaries fall.
     "s14_stream_dedup_watermarked" -> ((s, d) => {
-      val name = s"events_dupw_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.events(s, d)
-            .select(col("event_id"), col("user_id"),
-              to_json(struct(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-                col("user_id"), col("event_type"), col("value"))).as("json"))
-            .orderBy("event_id").toLocalIterator()
-          seedRows(name, numShards = 4, rows, times = 2)
-        }
-      }
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "10000000")
-        .load()
-      drain(s, raw
-        .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(timestamp_micros(col("e.ts_us")).as("ts"),
-          col("e.event_id"), col("e.event_type"))
+      val name = fixture(s"events_dupw_${sfx(d)}", 4, times = 2)(eventsJson(s, d))
+      drain(s, jsonStream(s, name, 10000000L, payloadSchema)
+        .select(timestamp_micros(col("ts_us")).as("ts"),
+          col("event_id"), col("event_type"))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_id"), col("event_type"),
@@ -966,28 +903,14 @@ object Streams extends QueryPack {
     // across shards is nondeterministic; admission is content-keyed
     // only), so the oracle is a pure NOT IN over the same index.
     "s20_stream_dedup_static" -> ((s, d) => {
-      val name = s"docs_ingest_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d)
-            .select(col("doc_id"), col("doc_id").as("pk"),
-              to_json(struct(col("doc_id"), col("lang"), col("n_chars"),
-                md5(col("text")).as("fp"))).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 4, rows, times = 1)
-        }
+      val name = fixture(s"docs_ingest_${sfx(d)}", 4) {
+        T.documents(s, d).select(col("doc_id"), col("doc_id").as("pk"),
+          to_json(struct(col("doc_id"), col("lang"), col("n_chars"),
+            md5(col("text")).as("fp"))).as("json"))
       }
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "10000000")
-        .load()
-      val docSchema = StructType(Seq(
+      val candidates = jsonStream(s, name, 10000000L, StructType(Seq(
         StructField("doc_id", LongType), StructField("lang", StringType),
-        StructField("n_chars", LongType), StructField("fp", StringType)))
-      val candidates = raw
-        .select(from_json(col("data").cast("string"), docSchema).as("e"))
-        .select(col("e.doc_id"), col("e.lang"), col("e.n_chars"), col("e.fp"))
+        StructField("n_chars", LongType), StructField("fp", StringType))))
       // count() is one cheap metadata-only action (parquet row-count);
       // both engines apply the same doc_id < N/2 predicate
       val histCut = T.documents(s, d).count() / 2
@@ -1016,7 +939,7 @@ object Streams extends QueryPack {
     // duplicated across the parent/child boundary.
     "s21_split_at_timestamp" -> ((s, d) => {
       val name = s"events_sts_${sfx(d)}"
-      synchronized { // same mid-seed-visibility rule as seedEventsJson
+      synchronized { // same mid-seed-visibility rule as fixture()
         if (!ShardServiceRegistry.exists(name)) {
           val src = T.events(s, d)
             .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
@@ -1070,26 +993,13 @@ object Streams extends QueryPack {
     // is one entry per event_id; with a watermark (here: none needed,
     // single bounded replay) it becomes evictable at 100 TB.
     "s07_stream_dedup" -> ((s, d) => {
-      val name = s"events_dup_${sfx(d)}"
-      synchronized { // same mid-seed-visibility rule as seedEventsJson
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.events(s, d)
-            .select(col("event_id"), col("user_id"),
-              to_json(struct(col("event_id"), col("event_type"))).as("json"))
-            .orderBy("event_id").toLocalIterator()
-          seedRows(name, numShards = 4, rows, times = 2) // every record twice
-        }
+      // every record put twice
+      val name = fixture(s"events_dup_${sfx(d)}", 4, times = 2) {
+        T.events(s, d).select(col("event_id"), col("user_id"),
+          to_json(struct(col("event_id"), col("event_type"))).as("json"))
       }
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "10000000")
-        .load()
-      val dupSchema = StructType(Seq(
-        StructField("event_id", LongType), StructField("event_type", StringType)))
-      drain(s, raw
-        .select(from_json(col("data").cast("string"), dupSchema).as("e"))
-        .select(col("e.event_id"), col("e.event_type"))
+      drain(s, jsonStream(s, name, 10000000L, StructType(Seq(
+          StructField("event_id", LongType), StructField("event_type", StringType))))
         .dropDuplicates("event_id"))
     }),
 
@@ -1137,18 +1047,10 @@ object Streams extends QueryPack {
     // output mode next to append (s01/s04/s06/s07) and the
     // foreachBatch/update shapes in the specs.
     "s08_stream_complete_agg" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val agg = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .groupBy(col("e.event_type").as("event_type"))
+      val agg = jsonStream(s, eventsRt(s, d), 50000L, payloadSchema)
+        .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
-          sum(expr("CAST(round(e.value * 1024) AS BIGINT)")).as("sum_vq"))
+          sum(expr("CAST(round(value * 1024) AS BIGINT)")).as("sum_vq"))
       drain(s, agg, outputMode = "complete")
     }),
 
@@ -1166,20 +1068,13 @@ object Streams extends QueryPack {
     // evictable via timeouts at 100 TB key cardinalities.
     "s10_stateful_running" -> ((s, d) => {
       import s.implicits._
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val cap = math.max(1000L, T.events(s, d).count() / 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-      val ev = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(col("e.user_id").as("user_id"),
+      val ev = jsonStream(s, name, cap, payloadSchema)
+        .select(col("user_id"),
           // null value -> 0: the (Long, Long) tuple encoder rejects
           // nulls, and adding 0 matches the oracle's null-skipping sum
-          expr("coalesce(CAST(round(e.value * 1024) AS BIGINT), CAST(0 AS BIGINT))").as("vq"))
+          expr("coalesce(CAST(round(value * 1024) AS BIGINT), CAST(0 AS BIGINT))").as("vq"))
         .as[(Long, Long)]
       val updated = ev.groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
@@ -1209,17 +1104,9 @@ object Streams extends QueryPack {
     // genuinely span batches.
     "s16_stream_milestones" -> ((s, d) => {
       import s.implicits._
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01/s10
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val cap = math.max(1000L, T.events(s, d).count() / 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-      val ev = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(col("e.user_id").as("user_id")).as[Long]
+      val ev = jsonStream(s, name, cap, payloadSchema).select(col("user_id")).as[Long]
       val milestones = ev.groupByKey(identity)
         .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
           (uid: Long, rows: Iterator[Long], st: GroupState[Long]) =>
@@ -1236,25 +1123,15 @@ object Streams extends QueryPack {
     // replayed through the source joined per micro-batch against a
     // STATIC dimension read from parquet (customer, keyed by
     // user_id = c_custkey). No broadcast hint: customer scales with
-    // the data (VERDICT r1 #1), so the planner picks the strategy
+    // the data, so the planner picks the strategy
     // from stats — hinting it broadcast would OOM at 100 TB. The
     // static side needs no watermark (it never changes); complete-
     // mode output so the final emission equals the batch join the
     // oracle states.
     "s09_stream_static_join" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val purchases = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .filter(col("e.event_type") === "purchase")
-        .select(col("e.event_id").as("event_id"),
-          col("e.user_id").as("user_id"),
-          col("e.value").as("value"))
+      val purchases = jsonStream(s, eventsRt(s, d), 50000L, payloadSchema)
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), col("value"))
       val cust = T.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
       val agg = purchases
         .join(cust, col("user_id") === col("c_custkey"))
@@ -1273,18 +1150,8 @@ object Streams extends QueryPack {
     // watermark are emitted — the oracle states that predicate over a
     // batch sessionization (same construction as q25's oracle).
     "s11_stream_session" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val events = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(timestamp_micros(col("e.ts_us")).as("ts"),
-          col("e.user_id").as("user_id"))
-      val agg = events
+      val agg = jsonStream(s, eventsRt(s, d), 50000L, payloadSchema)
+        .select(timestamp_micros(col("ts_us")).as("ts"), col("user_id"))
         .withWatermark("ts", "10 minutes")
         .groupBy(session_window(col("ts"), "30 minutes").as("w"), col("user_id"))
         .agg(count(lit(1)).as("n"))
@@ -1307,18 +1174,9 @@ object Streams extends QueryPack {
     // final watermark. State per open session is one merged interval —
     // identical eviction story to s11.
     "s29_dynamic_session" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val events = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(timestamp_micros(col("e.ts_us")).as("ts"),
-          col("e.user_id").as("user_id"),
-          col("e.event_type").as("event_type"))
+      val events = jsonStream(s, eventsRt(s, d), 50000L, payloadSchema)
+        .select(timestamp_micros(col("ts_us")).as("ts"), col("user_id"),
+          col("event_type"))
       // make_interval, not INTERVAL literals: session_window's dynamic
       // gap must be CalendarIntervalType, and ANSI parses INTERVAL
       // literals as DayTimeIntervalType (rejected at analysis)
@@ -1336,8 +1194,7 @@ object Streams extends QueryPack {
       drain(s, agg)
     }),
 
-    // Streaming near-dup admission (the last batch-only LLM loop
-    // closed, VERDICT r13 #9): q155's MinHash-band incremental
+    // Streaming near-dup admission: q155's MinHash-band incremental
     // admission run INCREMENTALLY — the crawl batch docs arrive over
     // the stream and each micro-batch is LSH-checked in foreachBatch
     // against the PERSISTED signature index of the existing corpus
@@ -1357,19 +1214,9 @@ object Streams extends QueryPack {
     "s30_stream_neardup_admission" -> ((s, d) => {
       import s.implicits._
       graft.GraftExtensions.ensureRegistered(s)
-      val name = s"docs_nd_${sfx(d)}"
       val isBatch = pmod(graft.functions.PortableHash.h60(col("doc_id")),
         lit(10)) === 0
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d)
-            .filter(isBatch)
-            .select(col("doc_id"), col("doc_id").as("pk"),
-              to_json(struct(col("doc_id"), col("text"))).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
-      }
+      val name = fixture(s"docs_nd_${sfx(d)}", 2)(docsText(s, d, isBatch))
       // the persisted index: existing-corpus shingles, signatures,
       // banded index — cached once, read by every micro-batch
       val k = Dedup.K
@@ -1380,61 +1227,42 @@ object Streams extends QueryPack {
         .toDF("b", "band", "mh").cache()
       val nBatch = T.documents(s, d).filter(isBatch).count()
       val cap = math.max(50L, nBatch / 3)
-      val root = s"/tmp/graft_neardup_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), docSchema).as("e"))
-        .select(col("e.doc_id").as("doc_id"), col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val bsh = batch
-            .select(col("doc_id"),
-              array_distinct(expr("word_ngrams(text, 3)")).as("sh"))
-            .filter(size(col("sh")) >= 1)
-          val bsig = bsh
-            .select(col("doc_id"), expr(s"minhash_sig(sh, $k)").as("sig"))
-          val cand = bsig
-            .select(col("doc_id").as("a"), posexplode(col("sig")))
-            .toDF("a", "band", "mh")
-            .join(ixBnd, Seq("band", "mh"))
-            .select(col("a"), col("b")).distinct()
-          val est = cand
-            .join(bsig.select(col("doc_id").as("a"), col("sig").as("siga")), "a")
-            .join(ixSig.select(col("doc_id").as("b"), col("sig").as("sigb")), "b")
-            .withColumn("matches",
-              size(filter(zip_with(col("siga"), col("sigb"), (x, y) => x === y),
-                v => v)))
-            .filter(col("matches") >= 5)
-            .select(col("a"), col("b"))
-          est
-            .join(bsh.toDF("a", "sha"), "a")
-            .join(ixSh.toDF("b", "shb"), "b")
-            .select(col("a"), col("b"),
-              size(array_intersect(col("sha"), col("shb"))).cast("long").as("inter"),
-              size(array_union(col("sha"), col("shb"))).cast("long").as("uni"))
-            .filter(col("inter") * 2 >= col("uni"))
-            .select(col("a"), col("b"),
-              expr("inter * 1000000L div uni").as("sim_ppm"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val in = jsonStream(s, name, cap, docTextSchema)
+      val pairs = monitor(s, d, "neardup", name, in) { (batch, emit) =>
+        val bsh = batch
+          .select(col("doc_id"),
+            array_distinct(expr("word_ngrams(text, 3)")).as("sh"))
+          .filter(size(col("sh")) >= 1)
+        val bsig = bsh
+          .select(col("doc_id"), expr(s"minhash_sig(sh, $k)").as("sig"))
+        val cand = bsig
+          .select(col("doc_id").as("a"), posexplode(col("sig")))
+          .toDF("a", "band", "mh")
+          .join(ixBnd, Seq("band", "mh"))
+          .select(col("a"), col("b")).distinct()
+        val est = cand
+          .join(bsig.select(col("doc_id").as("a"), col("sig").as("siga")), "a")
+          .join(ixSig.select(col("doc_id").as("b"), col("sig").as("sigb")), "b")
+          .withColumn("matches",
+            size(filter(zip_with(col("siga"), col("sigb"), (x, y) => x === y),
+              v => v)))
+          .filter(col("matches") >= 5)
+          .select(col("a"), col("b"))
+        emit("b", est
+          .join(bsh.toDF("a", "sha"), "a")
+          .join(ixSh.toDF("b", "shb"), "b")
+          .select(col("a"), col("b"),
+            size(array_intersect(col("sha"), col("shb"))).cast("long").as("inter"),
+            size(array_union(col("sha"), col("shb"))).cast("long").as("uni"))
+          .filter(col("inter") * 2 >= col("uni"))
+          .select(col("a"), col("b"),
+            expr("inter * 1000000L div uni").as("sim_ppm")))
+      }("b")
       // the index caches only serve the drained micro-batches
       ixSh.unpersist(); ixSig.unpersist(); ixBnd.unpersist()
       // quarantine worklist: per admitted-batch doc, match count +
       // best match (max sim, ties to smallest index doc_id)
-      s.read.schema("a LONG, b LONG, sim_ppm LONG").parquet(s"$root/b*")
+      pairs
         .groupBy($"a")
         .agg(count(lit(1)).as("n_matches"),
           max(struct($"sim_ppm", (-$"b").as("nb"))).as("m"))
@@ -1454,17 +1282,8 @@ object Streams extends QueryPack {
     // closed window lost or duplicated by the stream flips a
     // percentile and fails the hash gate.
     "s31_stream_quantile_monitor" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", "50000")
-        .load()
-      val ev = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(timestamp_micros(col("e.ts_us")).as("ts"),
-          col("e.event_type"), col("e.value"))
+      val ev = jsonStream(s, eventsRt(s, d), 50000L, payloadSchema)
+        .select(timestamp_micros(col("ts_us")).as("ts"), col("event_type"), col("value"))
         .filter(col("event_type") === "purchase" &&
           col("value").isNotNull && col("value") >= 0)
         .select(col("ts"),
@@ -1509,17 +1328,12 @@ object Streams extends QueryPack {
     "s32_stream_ivf_admission" -> ((s, d) => {
       import s.implicits._
       graft.GraftExtensions.ensureRegistered(s)
-      val name = s"vecs_ivf_${sfx(d)}"
       val isBatch = pmod(graft.functions.PortableHash.h60(col("vec_id")),
         lit(10)) === 0
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = Similarity.quantized(s, d).filter(isBatch)
-            .select(col("vec_id"), col("vec_id").as("pk"),
-              to_json(struct(col("vec_id"), col("q"))).as("json"))
-            .orderBy("vec_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
+      val name = fixture(s"vecs_ivf_${sfx(d)}", 2) {
+        Similarity.quantized(s, d).filter(isBatch)
+          .select(col("vec_id"), col("vec_id").as("pk"),
+            to_json(struct(col("vec_id"), col("q"))).as("json"))
       }
       // the persisted index state: base-only integer-mean centroids
       // (k rows, broadcast into every micro-batch) + base cell counts
@@ -1543,33 +1357,14 @@ object Streams extends QueryPack {
       nBase.count()
       val nBatchRows = Similarity.quantized(s, d).filter(isBatch).count()
       val cap = math.max(20L, nBatchRows / 3)
-      val root = s"/tmp/graft_ivfadm_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val vecSchema = StructType(Seq(
-        StructField("vec_id", LongType),
-        StructField("q", ArrayType(LongType))))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), vecSchema).as("e"))
-        .select(col("e.vec_id").as("vec_id"), col("e.q").as("q"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          assign(batch.withColumn("n2", expr("int_dot(q, q)")))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val in = jsonStream(s, name, cap, StructType(Seq(
+        StructField("vec_id", LongType), StructField("q", ArrayType(LongType)))))
+      val cells = monitor(s, d, "ivfadm", name, in) { (batch, emit) =>
+        emit("b", assign(batch.withColumn("n2", expr("int_dot(q, q)"))))
+      }("b")
       cent.unpersist() // only the micro-batch assignments read it
       // growth audit over the drained assignments — q198's report
-      s.read.schema("vec_id LONG, kcell LONG").parquet(s"$root/b*")
+      cells
         .groupBy($"kcell").agg(count(lit(1)).as("nb_cnt"))
         .join(nBase, Seq("kcell"), "right")
         .withColumn("n_batch", coalesce($"nb_cnt", lit(0L)))
@@ -1594,54 +1389,26 @@ object Streams extends QueryPack {
     // keeps only the fixed 4×256 register table as state.)
     "s33_stream_cms_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = s"docs_cms_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d)
-            .select(col("doc_id"), col("doc_id").as("pk"),
-              to_json(struct(col("doc_id"), col("text"))).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
-      }
+      val name = fixture(s"docs_cms_${sfx(d)}", 2)(docsText(s, d, lit(true)))
       val probeArr = (w: org.apache.spark.sql.Column) =>
         array((0 until 4).map(i => struct(lit(i).as("r"),
           pmod(graft.functions.PortableHash.h60(
             concat_ws("|", lit(i), w)), lit(256)).as("b"))): _*)
       val nDocs = T.documents(s, d).count()
       val cap = math.max(50L, nDocs / 4)
-      val root = s"/tmp/graft_cms_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), docSchema).as("e"))
-        .select(col("e.doc_id").as("doc_id"), col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val counts = batch.select(explode(split(col("text"), " ")).as("w"))
-            .groupBy(col("w")).agg(count(lit(1)).as("n"))
-            .localCheckpoint() // two consumers per batch
-          counts.write.mode("overwrite").parquet(s"$root/c$batchId")
-          counts.select(col("n"), explode(probeArr(col("w"))).as("p"))
-            .groupBy(col("p.r").as("r"), col("p.b").as("b"))
-            .agg(sum(col("n")).as("c"))
-            .write.mode("overwrite").parquet(s"$root/m$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      val counts = s.read.schema("w STRING, n LONG").parquet(s"$root/c*")
+      val in = jsonStream(s, name, cap, docTextSchema)
+      val parts = monitor(s, d, "cms", name, in) { (batch, emit) =>
+        val counts = batch.select(explode(split(col("text"), " ")).as("w"))
+          .groupBy(col("w")).agg(count(lit(1)).as("n"))
+          .localCheckpoint() // two consumers per batch
+        emit("c", counts)
+        emit("m", counts.select(col("n"), explode(probeArr(col("w"))).as("p"))
+          .groupBy(col("p.r").as("r"), col("p.b").as("b"))
+          .agg(sum(col("n")).as("c")))
+      }
+      val counts = parts("c")
         .groupBy($"w").agg(sum($"n").as("n")).cache() // harness-released (per-query clearCache)
-      val matrix = s.read.schema("r INT, b LONG, c LONG").parquet(s"$root/m*")
+      val matrix = parts("m")
         .groupBy($"r", $"b").agg(sum($"c").as("c"))
       val top = counts.orderBy($"n".desc, $"w".asc).limit(20)
       top.select($"w", $"n", explode(probeArr($"w")).as("p"))
@@ -1672,29 +1439,18 @@ object Streams extends QueryPack {
     // validity by lead) must equal the streamed result row-for-row.
     "s34_stream_scd2" -> ((s, d) => {
       import s.implicits._
-      val name = s"scd2_${sfx(d)}"
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = fixture(s"scd2_${sfx(d)}", 4)(eventsJson(s, d))
       val nEv = T.events(s, d).count()
       val cap = math.max(50L, nEv / 4)
-      val root = s"/tmp/graft_scd2_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = scratch(s, d, "scd2")
       val dimSchema = "user_id LONG, attr STRING, eff_from_us LONG, " +
         "eff_from_id LONG, eff_to_us LONG, eff_to_id LONG, is_current LONG"
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(col("e.user_id").as("user_id"),
-          col("e.event_type").as("attr"),
-          col("e.ts_us").as("us"), col("e.event_id").as("id"))
+      val raw = jsonStream(s, name, cap, payloadSchema)
+        .select(col("user_id"), col("event_type").as("attr"),
+          col("ts_us").as("us"), col("event_id").as("id"))
       graft.streaming.StreamObservability.attach(s)
       val lastBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val q = raw.writeStream.outputMode("append")
+      raw.writeStream.outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val prev =
@@ -1731,8 +1487,7 @@ object Streams extends QueryPack {
             .write.mode("overwrite").parquet(s"$root/dim$batchId")
           lastBatch.updateAndGet(mb => math.max(mb, batchId))
           ()
-        }.start()
-      q.awaitTermination()
+        }.start().awaitTermination()
       require(lastBatch.get() >= 0, "s34: stream produced no batches")
       s.read.schema(dimSchema).parquet(s"$root/dim${lastBatch.get()}")
     }),
@@ -1759,18 +1514,8 @@ object Streams extends QueryPack {
     "s35_stream_bloom_dedup" -> ((s, d) => {
       import s.implicits._
       val h60 = graft.functions.PortableHash.h60 _
-      val name = s"docs_bloom_${sfx(d)}"
       val isStrm = pmod(h60(col("doc_id")), lit(10)) === 0
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d)
-            .filter(isStrm)
-            .select(col("doc_id"), col("doc_id").as("pk"),
-              to_json(struct(col("doc_id"), col("text"))).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
-      }
+      val name = fixture(s"docs_bloom_${sfx(d)}", 2)(docsText(s, d, isStrm))
       val fpOf = (t: org.apache.spark.sql.Column) =>
         h60(concat_ws(" ", slice(split(t, " "), 1, 3)))
       val probes = (fp: org.apache.spark.sql.Column) =>
@@ -1785,53 +1530,32 @@ object Streams extends QueryPack {
         .groupBy($"word_i").agg(expr("bit_or(m)").as("bits")).cache()
       val nStrm = T.documents(s, d).filter(isStrm).count()
       val cap = math.max(10L, nStrm / 3)
-      val root = s"/tmp/graft_bloomdd_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), docSchema).as("e"))
-        .select(col("e.doc_id").as("doc_id"), col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val bfp = batch.select(col("doc_id"), fpOf(col("text")).as("fp"))
-          val maybe = bfp
-            .select(col("doc_id"), col("fp"), probes(col("fp")).as("idx"))
-            .select(col("doc_id"), col("fp"),
-              expr("CAST(idx div 62 AS INT)").as("word_i"),
-              expr("shiftleft(CAST(1 AS BIGINT), CAST(idx % 62 AS INT))")
-                .as("m"))
-            .join(broadcast(bloom), Seq("word_i"), "left")
-            .groupBy(col("doc_id"), col("fp"))
-            .agg(sum(when(coalesce(col("bits"), lit(0L))
-              .bitwiseAND(col("m")) =!= 0L, 1L).otherwise(0L)).as("hits"))
-            .select(col("doc_id"), col("fp"),
-              (col("hits") === 3L).as("bloom_maybe"))
-          // only the maybe-set touches the index — the Bloom's point
-          val dup = maybe.filter(col("bloom_maybe"))
-            .join(ixFp.select(col("fp"), col("doc_id").as("ix_id")), Seq("fp"))
-            .groupBy(col("doc_id")).agg(min(col("ix_id")).as("dup_min"))
-          maybe.join(dup, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("bloom_maybe"),
-              col("dup_min").isNotNull.as("is_dup"),
-              coalesce(col("dup_min"), lit(-1L)).as("dup_of"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val in = jsonStream(s, name, cap, docTextSchema)
+      val out = monitor(s, d, "bloomdd", name, in) { (batch, emit) =>
+        val bfp = batch.select(col("doc_id"), fpOf(col("text")).as("fp"))
+        val maybe = bfp
+          .select(col("doc_id"), col("fp"), probes(col("fp")).as("idx"))
+          .select(col("doc_id"), col("fp"),
+            expr("CAST(idx div 62 AS INT)").as("word_i"),
+            expr("shiftleft(CAST(1 AS BIGINT), CAST(idx % 62 AS INT))")
+              .as("m"))
+          .join(broadcast(bloom), Seq("word_i"), "left")
+          .groupBy(col("doc_id"), col("fp"))
+          .agg(sum(when(coalesce(col("bits"), lit(0L))
+            .bitwiseAND(col("m")) =!= 0L, 1L).otherwise(0L)).as("hits"))
+          .select(col("doc_id"), col("fp"),
+            (col("hits") === 3L).as("bloom_maybe"))
+        // only the maybe-set touches the index — the Bloom's point
+        val dup = maybe.filter(col("bloom_maybe"))
+          .join(ixFp.select(col("fp"), col("doc_id").as("ix_id")), Seq("fp"))
+          .groupBy(col("doc_id")).agg(min(col("ix_id")).as("dup_min"))
+        emit("b", maybe.join(dup, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("bloom_maybe"),
+            col("dup_min").isNotNull.as("is_dup"),
+            coalesce(col("dup_min"), lit(-1L)).as("dup_of")))
+      }("b")
       ixFp.unpersist(); bloom.unpersist() // batch-side only
-      s.read.schema("doc_id LONG, bloom_maybe BOOLEAN, is_dup BOOLEAN, " +
-        "dup_of LONG").parquet(s"$root/b*")
-        .select($"doc_id", $"bloom_maybe", $"is_dup", $"dup_of")
+      out
     }),
 
     // Streaming point-in-time temporal join — the feature-store
@@ -1863,50 +1587,20 @@ object Streams extends QueryPack {
       val h60 = graft.functions.PortableHash.h60 _
       graft.GraftExtensions.ensureRegistered(s)
       val isEval = pmod(h60(col("doc_id")), lit(10)) === 0
-      val name = s"docs_contam_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d).filter(!isEval)
-            .select(col("doc_id"), col("doc_id").as("pk"),
-              to_json(struct(col("doc_id"), col("text"))).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
-      }
+      val name = fixture(s"docs_contam_${sfx(d)}", 2)(docsText(s, d, !isEval))
       val evalGrams = T.documents(s, d).filter(isEval)
         .select($"doc_id", explode(expr("word_ngrams(text, 8)")).as("g"))
         .select($"doc_id", h60($"g").as("gh")).cache()
       val universe = evalGrams.select($"gh").distinct().cache()
       val nTrain = T.documents(s, d).filter(!isEval).count()
       val cap = math.max(10L, nTrain / 4)
-      val root = s"/tmp/graft_contam_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), docSchema).as("e"))
-        .select(col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.select(explode(expr("word_ngrams(text, 8)")).as("g"))
-            .select(graft.functions.PortableHash.h60(col("g")).as("gh"))
-            .distinct()
-            .join(broadcast(universe), Seq("gh"), "left_semi")
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      val matched = s.read.schema("gh LONG").parquet(s"$root/b*")
-        .distinct()
+      val in = jsonStream(s, name, cap, docTextSchema).select(col("text"))
+      val matched = monitor(s, d, "contam", name, in) { (batch, emit) =>
+        emit("b", batch.select(explode(expr("word_ngrams(text, 8)")).as("g"))
+          .select(h60(col("g")).as("gh"))
+          .distinct()
+          .join(broadcast(universe), Seq("gh"), "left_semi"))
+      }("b").distinct()
       val out = evalGrams
         .join(matched.select($"gh".as("mgh")), $"gh" === $"mgh", "left")
         .groupBy($"doc_id")
@@ -1934,65 +1628,35 @@ object Streams extends QueryPack {
     "s39_stream_ivm_retraction" -> ((s, d) => {
       import s.implicits._
       val h60 = graft.functions.PortableHash.h60 _
-      val name = s"orders_cdc_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.orders(s, d)
-            .select($"o_orderkey", $"o_orderkey".as("pk"),
-              to_json(struct($"o_orderkey".as("k"),
-                $"o_orderpriority".as("pri"),
-                graft.functions.Exact.cents($"o_totalprice").as("c")))
-                .as("json"))
-            .orderBy("o_orderkey").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
+      val name = fixture(s"orders_cdc_${sfx(d)}", 2) {
+        T.orders(s, d).select($"o_orderkey", $"o_orderkey".as("pk"),
+          to_json(struct($"o_orderkey".as("k"), $"o_orderpriority".as("pri"),
+            graft.functions.Exact.cents($"o_totalprice").as("c"))).as("json"))
       }
       val nOrd = T.orders(s, d).count()
       val cap = math.max(10L, nOrd / 4)
-      val root = s"/tmp/graft_scdc_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val cdcSchema = StructType(Seq(
+      val in = jsonStream(s, name, cap, StructType(Seq(
         StructField("k", LongType), StructField("pri", StringType),
-        StructField("c", LongType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), cdcSchema).as("e"))
-        .select(col("e.k").as("k"), col("e.pri").as("pri"),
-          col("e.c").as("c"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val f = batch.select(col("pri"), col("c"),
-            (pmod(graft.functions.PortableHash.h60(col("k")),
-              lit(7)) === 0).as("u7"),
-            (pmod(graft.functions.PortableHash.h60(col("k")),
-              lit(13)) === 0).as("u13"))
-          val deltas = f.select(col("pri"), lit(1L).as("op"), col("c"))
-            .unionAll(f.filter(col("u7"))
-              .select(col("pri"), lit(-1L).as("op"), col("c")))
-            .unionAll(f.filter(col("u7"))
-              .select(col("pri"), lit(1L).as("op"),
-                (col("c") + 10000L).as("c")))
-            .unionAll(f.filter(col("u13"))
-              .select(col("pri"), lit(-1L).as("op"),
-                when(col("u7"), col("c") + 10000L).otherwise(col("c"))
-                  .as("c")))
-          deltas.groupBy(col("pri"))
-            .agg(sum(col("op")).cast("long").as("dn"),
-              sum(col("op") * col("c")).cast("long").as("dsum"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      val inc = s.read.schema("pri STRING, dn LONG, dsum LONG")
-        .parquet(s"$root/b*")
+        StructField("c", LongType))))
+      val partials = monitor(s, d, "scdc", name, in) { (batch, emit) =>
+        val f = batch.select(col("pri"), col("c"),
+          (pmod(h60(col("k")), lit(7)) === 0).as("u7"),
+          (pmod(h60(col("k")), lit(13)) === 0).as("u13"))
+        val deltas = f.select(col("pri"), lit(1L).as("op"), col("c"))
+          .unionAll(f.filter(col("u7"))
+            .select(col("pri"), lit(-1L).as("op"), col("c")))
+          .unionAll(f.filter(col("u7"))
+            .select(col("pri"), lit(1L).as("op"),
+              (col("c") + 10000L).as("c")))
+          .unionAll(f.filter(col("u13"))
+            .select(col("pri"), lit(-1L).as("op"),
+              when(col("u7"), col("c") + 10000L).otherwise(col("c"))
+                .as("c")))
+        emit("b", deltas.groupBy(col("pri"))
+          .agg(sum(col("op")).cast("long").as("dn"),
+            sum(col("op") * col("c")).cast("long").as("dsum")))
+      }("b")
+      val inc = partials
         .groupBy($"pri")
         .agg(sum($"dn").cast("bigint").as("n_inc"),
           sum($"dsum").cast("bigint").as("sum_inc_c"))
@@ -2028,57 +1692,31 @@ object Streams extends QueryPack {
     // hash, so replay/reshard can't move the sample.
     "s38_stream_priority_sample" -> ((s, d) => {
       import s.implicits._
-      val name = s"docs_psamp_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d)
-            .select(col("doc_id"), col("doc_id").as("pk"),
-              to_json(struct(col("doc_id"), col("n_chars"))).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
+      val name = fixture(s"docs_psamp_${sfx(d)}", 2) {
+        T.documents(s, d).select(col("doc_id"), col("doc_id").as("pk"),
+          to_json(struct(col("doc_id"), col("n_chars"))).as("json"))
       }
       val kTop = 20
       val nDocs = T.documents(s, d).count()
       val cap = math.max(10L, nDocs / 4)
-      val root = s"/tmp/graft_psamp_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("n_chars", LongType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), docSchema).as("e"))
-        .select(col("e.doc_id").as("doc_id"), col("e.n_chars").as("n_chars"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val pri = batch
-            .select(col("doc_id"), col("n_chars").cast("long").as("w"))
-            .withColumn("u",
-              pmod(graft.functions.PortableHash.h60(col("doc_id")),
-                lit(1099511627776L)) + lit(1L))
-            .withColumn("pkey", expr("w * 1099511627776 div u"))
-          // per-batch synopsis: local top-(K+1) + the batch's Σw
-          pri.select(col("doc_id"), col("w"), col("pkey"))
-            .orderBy(col("pkey").desc, col("doc_id").asc).limit(kTop + 1)
-            .withColumn("w_sum", lit(null).cast("long"))
-            .unionAll(pri.agg(coalesce(sum(col("w")), lit(0L))
-                .cast("long").as("w_sum"))
-              .select(lit(-1L).as("doc_id"), lit(0L).as("w"),
-                lit(-1L).as("pkey"), col("w_sum")))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      val syn = s.read.schema("doc_id LONG, w LONG, pkey LONG, w_sum LONG")
-        .parquet(s"$root/b*")
+      val in = jsonStream(s, name, cap, StructType(Seq(
+        StructField("doc_id", LongType), StructField("n_chars", LongType))))
+      val syn = monitor(s, d, "psamp", name, in) { (batch, emit) =>
+        val pri = batch
+          .select(col("doc_id"), col("n_chars").cast("long").as("w"))
+          .withColumn("u",
+            pmod(graft.functions.PortableHash.h60(col("doc_id")),
+              lit(1099511627776L)) + lit(1L))
+          .withColumn("pkey", expr("w * 1099511627776 div u"))
+        // per-batch synopsis: local top-(K+1) + the batch's Σw
+        emit("b", pri.select(col("doc_id"), col("w"), col("pkey"))
+          .orderBy(col("pkey").desc, col("doc_id").asc).limit(kTop + 1)
+          .withColumn("w_sum", lit(null).cast("long"))
+          .unionAll(pri.agg(coalesce(sum(col("w")), lit(0L))
+              .cast("long").as("w_sum"))
+            .select(lit(-1L).as("doc_id"), lit(0L).as("w"),
+              lit(-1L).as("pkey"), col("w_sum"))))
+      }("b")
       // exact merge: union of bounded synopses → global top-(K+1)
       val cand = T.boundedCollect(
         syn.filter($"w_sum".isNull)
@@ -2111,51 +1749,25 @@ object Streams extends QueryPack {
     // ONE pass and |sources|·5 numbers of state, ever.
     "s45_stream_shape_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = s"docs_shape_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d)
-            .select($"doc_id", $"doc_id".as("pk"),
-              to_json(struct($"source", $"n_chars".as("x"))).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
+      val name = fixture(s"docs_shape_${sfx(d)}", 2) {
+        T.documents(s, d).select($"doc_id", $"doc_id".as("pk"),
+          to_json(struct($"source", $"n_chars".as("x"))).as("json"))
       }
       val nDocs = T.documents(s, d).count()
       val cap = math.max(10L, nDocs / 4)
-      val root = s"/tmp/graft_sshape_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val dSchema = StructType(Seq(
-        StructField("source", StringType), StructField("x", LongType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), dSchema).as("e"))
-        .select(col("e.source").as("source"), col("e.x").as("x"))
-      graft.streaming.StreamObservability.attach(s)
+      val in = jsonStream(s, name, cap, StructType(Seq(
+        StructField("source", StringType), StructField("x", LongType))))
       val dec = "DECIMAL(38,0)"
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy(col("source"))
-            .agg(count(lit(1)).cast("long").as("n"),
-              sum(expr(s"CAST(x AS $dec)")).as("s1"),
-              sum(expr(s"CAST(x AS $dec) * x").cast(dec)).as("s2"),
-              sum(expr(s"CAST(x AS $dec) * x * x").cast(dec)).as("s3"),
-              sum(expr(s"CAST(x AS $dec) * x * x * x").cast(dec)).as("s4"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val sums = monitor(s, d, "sshape", name, in) { (batch, emit) =>
+        emit("b", batch.groupBy(col("source"))
+          .agg(count(lit(1)).cast("long").as("n"),
+            sum(expr(s"CAST(x AS $dec)")).as("s1"),
+            sum(expr(s"CAST(x AS $dec) * x").cast(dec)).as("s2"),
+            sum(expr(s"CAST(x AS $dec) * x * x").cast(dec)).as("s3"),
+            sum(expr(s"CAST(x AS $dec) * x * x * x").cast(dec)).as("s4")))
+      }("b")
       Pipeline.shapeReport(
-        s.read.schema("source STRING, n LONG, s1 DECIMAL(38,0), " +
-            "s2 DECIMAL(38,0), s3 DECIMAL(38,0), s4 DECIMAL(38,0)")
-          .parquet(s"$root/b*")
+        sums
           .groupBy($"source")
           .agg(sum($"n").cast("bigint").as("n"),
             sum($"s1").cast("decimal(38,0)").as("s1"),
@@ -2175,55 +1787,29 @@ object Streams extends QueryPack {
     // fertility tracked DURING ingest.
     "s46_stream_fertility_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = s"docs_fert_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d)
-            .select($"doc_id", $"doc_id".as("pk"),
-              to_json(struct($"lang", $"text")).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
+      val name = fixture(s"docs_fert_${sfx(d)}", 2) {
+        T.documents(s, d).select($"doc_id", $"doc_id".as("pk"),
+          to_json(struct($"lang", $"text")).as("json"))
       }
       val tokc = TextAnalysis.bpeTrainedTokenCounts(s, d)
         .localCheckpoint()
       val nDocs = T.documents(s, d).count()
       val cap = math.max(10L, nDocs / 4)
-      val root = s"/tmp/graft_sfert_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val dSchema = StructType(Seq(
-        StructField("lang", StringType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), dSchema).as("e"))
-        .select(col("e.lang").as("lang"), col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch
-            .select(col("lang"), explode(split(col("text"), " ")).as("w"))
-            .filter(length(col("w")) >= 1)
-            .join(broadcast(tokc), Seq("w"), "left")
-            .select(col("lang"),
-              coalesce(col("toks"), lit(1L)).as("toks"),
-              length(col("w")).cast("long").as("chars"))
-            .groupBy(col("lang"))
-            .agg(count(lit(1)).cast("long").as("n_words"),
-              sum(col("toks")).cast("long").as("n_tokens"),
-              sum(col("chars")).cast("long").as("n_chars"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      s.read.schema("lang STRING, n_words LONG, n_tokens LONG, n_chars LONG")
-        .parquet(s"$root/b*")
+      val in = jsonStream(s, name, cap, StructType(Seq(
+        StructField("lang", StringType), StructField("text", StringType))))
+      monitor(s, d, "sfert", name, in) { (batch, emit) =>
+        emit("b", batch
+          .select(col("lang"), explode(split(col("text"), " ")).as("w"))
+          .filter(length(col("w")) >= 1)
+          .join(broadcast(tokc), Seq("w"), "left")
+          .select(col("lang"),
+            coalesce(col("toks"), lit(1L)).as("toks"),
+            length(col("w")).cast("long").as("chars"))
+          .groupBy(col("lang"))
+          .agg(count(lit(1)).cast("long").as("n_words"),
+            sum(col("toks")).cast("long").as("n_tokens"),
+            sum(col("chars")).cast("long").as("n_chars")))
+      }("b")
         .groupBy($"lang")
         .agg(sum($"n_words").cast("bigint").as("n_words"),
           sum($"n_tokens").cast("bigint").as("n_tokens"),
@@ -2233,8 +1819,8 @@ object Streams extends QueryPack {
           expr("n_chars * 1000 div n_tokens").as("chars_per_token_milli"))
     }),
 
-    // Streaming Bloom-size monitor — q311's ingest-side form (VERDICT
-    // r16 #9's named candidate): the SIZE dial of s35's Bloom is
+    // Streaming Bloom-size monitor — q311's ingest-side form: the SIZE
+    // dial of s35's Bloom is
     // re-measured DURING ingest. Fixed state = the index position
     // sets per candidate m (≤ 256+1024+4096 = 5376 distinct positions
     // total — position sets are bounded by the BIT ARRAYS, not the
@@ -2247,18 +1833,9 @@ object Streams extends QueryPack {
     "s47_stream_bloom_monitor" -> ((s, d) => {
       import s.implicits._
       val h60 = graft.functions.PortableHash.h60 _
-      val name = s"docs_bloom_${sfx(d)}" // s35's fixture stream
       val isStrm = pmod(h60(col("doc_id")), lit(10)) === 0
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d)
-            .filter(isStrm)
-            .select(col("doc_id"), col("doc_id").as("pk"),
-              to_json(struct(col("doc_id"), col("text"))).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
-      }
+      // s35's fixture stream
+      val name = fixture(s"docs_bloom_${sfx(d)}", 2)(docsText(s, d, isStrm))
       val fpOf = (t: org.apache.spark.sql.Column) =>
         h60(concat_ws(" ", slice(split(t, " "), 1, 3)))
       def probes(fp: org.apache.spark.sql.Column) =
@@ -2276,51 +1853,30 @@ object Streams extends QueryPack {
         .localCheckpoint()
       val nStrm = T.documents(s, d).filter(isStrm).count()
       val cap = math.max(10L, nStrm / 3)
-      val root = s"/tmp/graft_sbsz_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fsb = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsb.delete(new org.apache.hadoop.fs.Path(root), true)
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), docSchema).as("e"))
-        .select(col("e.doc_id").as("doc_id"), col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val strm = batch.select(col("doc_id"), fpOf(col("text")).as("fp"))
-          val maybe = strm.crossJoin(broadcast(ms))
-            .select(col("mb"), col("doc_id"), col("fp"),
-              probes(col("fp")).as("ph"))
-            .select(col("mb"), col("doc_id"), col("fp"),
-              pmod(col("ph"), col("mb")).as("pos"))
-            .join(broadcast(ipos), Seq("mb", "pos"), "left")
-            .groupBy(col("mb"), col("doc_id"), col("fp"))
-            .agg((sum(coalesce(col("hit"), lit(0L))) === 3L).as("bm"))
-          maybe
-            .join(ixFps, Seq("fp"), "left")
-            .withColumn("is_dup", coalesce(col("dup"), lit(0L)))
-            .groupBy(col("mb"))
-            .agg(count(lit(1)).cast("long").as("n_probe"),
-              sum((col("is_dup") === 0L).cast("long")).cast("long")
-                .as("n_neg"),
-              sum((col("bm") && col("is_dup") === 0L).cast("long"))
-                .cast("long").as("n_fp"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      // q311's OWN fpr/chosen report (ADVICE r17: factored, not
-      // re-inlined) over the summed per-batch count partials
-      Sketches.bloomSizeReport(s.read
-        .schema("mb LONG, n_probe LONG, n_neg LONG, n_fp LONG")
-        .parquet(s"$root/b*")
+      val in = jsonStream(s, name, cap, docTextSchema)
+      val counts = monitor(s, d, "sbsz", name, in) { (batch, emit) =>
+        val strm = batch.select(col("doc_id"), fpOf(col("text")).as("fp"))
+        val maybe = strm.crossJoin(broadcast(ms))
+          .select(col("mb"), col("doc_id"), col("fp"),
+            probes(col("fp")).as("ph"))
+          .select(col("mb"), col("doc_id"), col("fp"),
+            pmod(col("ph"), col("mb")).as("pos"))
+          .join(broadcast(ipos), Seq("mb", "pos"), "left")
+          .groupBy(col("mb"), col("doc_id"), col("fp"))
+          .agg((sum(coalesce(col("hit"), lit(0L))) === 3L).as("bm"))
+        emit("b", maybe
+          .join(ixFps, Seq("fp"), "left")
+          .withColumn("is_dup", coalesce(col("dup"), lit(0L)))
+          .groupBy(col("mb"))
+          .agg(count(lit(1)).cast("long").as("n_probe"),
+            sum((col("is_dup") === 0L).cast("long")).cast("long")
+              .as("n_neg"),
+            sum((col("bm") && col("is_dup") === 0L).cast("long"))
+              .cast("long").as("n_fp")))
+      }("b")
+      // q311's own fpr/chosen report over the summed per-batch count
+      // partials
+      Sketches.bloomSizeReport(counts
         .groupBy($"mb")
         .agg(sum($"n_probe").cast("bigint").as("n_probe"),
           sum($"n_neg").cast("bigint").as("n_neg"),
@@ -2328,124 +1884,44 @@ object Streams extends QueryPack {
     }),
 
     // Streaming data-profile monitor — q113's ingest-side form and
-    // the FILE-FOOTER STATS op a lakehouse writer runs per file
-    // (VERDICT r16 #9's zone-map candidate, over batch partials):
-    // each micro-batch writes (a) its one-row stats partial — row
-    // count, per-column null counts and numeric/string min/max, the
-    // exact semilattice/linear merges a parquet footer carries — and
-    // (b) its DISTINCT value set per column (the one non-linear
-    // statistic; the exact union across batches reproduces q113's
-    // countDistinct), and (c) the HLL REGISTER partial for the same
-    // columns (≤ 4·32 rows of state per batch, s42's register-max
-    // semilattice) — the bounded column class production swaps in for
-    // (b) when exactness isn't required, demonstrated here AS CODE
-    // beside the exact one (VERDICT r17 #2): the post-drain HLL path
-    // reads ONLY the register partials, never the value sets. Merge =
-    // sum/sum, min/min, max/max, union-distinct, register-max — gated
-    // by q113's oracle for the exact columns plus q214's integer-exact
-    // estimate replay for the HLL ones.
+    // the FILE-FOOTER STATS op a lakehouse writer runs per file (a
+    // zone map over batch partials): each micro-batch writes (a) its
+    // one-row stats partial — row count, per-column null counts and
+    // numeric/string min/max, the exact semilattice/linear merges a
+    // parquet footer carries — and (b) its DISTINCT value set per
+    // column (the one non-linear statistic; the exact union across
+    // batches reproduces q113's countDistinct), and (c) the HLL
+    // REGISTER partial for the same columns (≤ 4·32 rows of state per
+    // batch, s42's register-max semilattice) — the bounded column class
+    // production swaps in for (b) when exactness isn't required,
+    // demonstrated here AS CODE beside the exact one: the post-drain
+    // HLL path reads ONLY the register partials, never the value sets.
+    // Merge = sum/sum, min/min, max/max, union-distinct, register-max —
+    // gated by q113's oracle for the exact columns plus q214's
+    // integer-exact estimate replay for the HLL ones.
     "s48_stream_profile_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = ordersProfFixture(s, d)
-      val nOrd = T.orders(s, d).count()
-      val cap = math.max(50L, nOrd / 4)
-      val root = s"/tmp/graft_sprof_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fsb = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsb.delete(new org.apache.hadoop.fs.Path(root), true)
-      val oSchema = StructType(Seq(
-        StructField("ck", LongType), StructField("st", StringType),
-        StructField("pc", LongType), StructField("ep", LongType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), oSchema).as("e"))
-        .select(col("e.ck").as("ck"), col("e.st").as("st"),
-          col("e.pc").as("pc"), col("e.ep").as("ep"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.agg(
-            count(lit(1)).cast("long").as("n_rows"),
-            sum(col("ck").isNull.cast("long")).cast("long").as("ck_nulls"),
-            min(col("ck")).as("ck_min"), max(col("ck")).as("ck_max"),
-            sum(col("st").isNull.cast("long")).cast("long").as("st_nulls"),
-            min(col("st")).as("st_min"), max(col("st")).as("st_max"),
-            sum(col("pc").isNull.cast("long")).cast("long").as("pc_nulls"),
-            min(col("pc")).as("pc_min"), max(col("pc")).as("pc_max"),
-            sum(col("ep").isNull.cast("long")).cast("long").as("ep_nulls"),
-            min(col("ep")).as("ep_min"), max(col("ep")).as("ep_max"))
-            .write.mode("overwrite").parquet(s"$root/st$batchId")
-          val dvb = batch.selectExpr(
-            "stack(4, 'o_custkey', CAST(ck AS STRING)," +
-              " 'o_orderstatus', st," +
-              " 'o_totalprice_cents', CAST(pc AS STRING)," +
-              " 'o_orderdate_epoch_s', CAST(ep AS STRING))" +
-              " AS (col_name, val)")
-            .filter(col("val").isNotNull).distinct()
-          // two actions read dvb (the dv write and the register pass)
-          // — persist across them so the stack+distinct shuffle runs
-          // once per batch, released before the batch returns (in a
-          // finally: a throwing write must not leak the cached frame
-          // for the session)
-          dvb.persist()
-          try {
-            dvb.write.mode("overwrite").parquet(s"$root/dv$batchId")
-            // the HLL column class: the same values reduced to a ≤4·32-
-            // row register partial (q214's bank via the factored
-            // hllRegisterRows) — the ONLY per-batch ndv state a
-            // production profile writer keeps once exactness is waived
-            Sketches.hllRegisterRows(
-              dvb.select(col("col_name"),
-                graft.functions.PortableHash.h60(col("val")).as("h")),
-              "col_name")
-              .write.mode("overwrite").parquet(s"$root/hll$batchId")
-          } finally dvb.unpersist()
-          ()
-        }.start()
-      q.awaitTermination()
-      val wide = s.read.schema("n_rows LONG, ck_nulls LONG, ck_min LONG, " +
-          "ck_max LONG, st_nulls LONG, st_min STRING, st_max STRING, " +
-          "pc_nulls LONG, pc_min LONG, pc_max LONG, ep_nulls LONG, " +
-          "ep_min LONG, ep_max LONG")
-        .parquet(s"$root/st*")
-        .agg(sum($"n_rows").cast("bigint").as("n_rows"),
-          sum($"ck_nulls").cast("bigint").as("ck_nulls"),
-          min($"ck_min").cast("string").as("ck_min"),
-          max($"ck_max").cast("string").as("ck_max"),
-          sum($"st_nulls").cast("bigint").as("st_nulls"),
-          min($"st_min").as("st_min"), max($"st_max").as("st_max"),
-          sum($"pc_nulls").cast("bigint").as("pc_nulls"),
-          min($"pc_min").cast("string").as("pc_min"),
-          max($"pc_max").cast("string").as("pc_max"),
-          sum($"ep_nulls").cast("bigint").as("ep_nulls"),
-          min($"ep_min").cast("string").as("ep_min"),
-          max($"ep_max").cast("string").as("ep_max"))
-      val dcnt = s.read.schema("col_name STRING, val STRING")
-        .parquet(s"$root/dv*")
-        .groupBy($"col_name")
+      val (name, in) = ordersProf(s, d)
+      val p = monitor(s, d, "sprof", name, in) { (batch, emit) =>
+        emit("st", profileStats(batch))
+        val dvb = profileValues(batch).distinct()
+        // two actions read dvb (the dv write and the register pass) —
+        // persist across them so the stack+distinct shuffle runs once
+        // per batch, released before the batch returns (in a finally:
+        // a throwing write must not leak the cached frame for the
+        // session)
+        dvb.persist()
+        try {
+          emit("dv", dvb)
+          // the HLL column class: the same values reduced to a ≤4·32-
+          // row register partial — the ONLY per-batch ndv state a
+          // production profile writer keeps once exactness is waived
+          emit("hll", profileRegisters(dvb))
+        } finally dvb.unpersist()
+      }
+      val dcnt = p("dv").groupBy($"col_name")
         .agg(countDistinct($"val").as("n_distinct"))
-      // register-max across batches (the semilattice merge), then
-      // q214's integer-exact estimate — no value set is ever read
-      val hll = Sketches.hllEstimate(
-        s.read.schema("col_name STRING, j LONG, reg LONG")
-          .parquet(s"$root/hll*")
-          .groupBy($"col_name", $"j").agg(max($"reg").as("reg")),
-        "col_name")
-        .withColumnRenamed("est_hll", "ndv_hll")
-      wide.selectExpr("n_rows",
-        """stack(4,
-          |  'o_custkey',           ck_nulls, ck_min, ck_max,
-          |  'o_orderstatus',       st_nulls, st_min, st_max,
-          |  'o_totalprice_cents',  pc_nulls, pc_min, pc_max,
-          |  'o_orderdate_epoch_s', ep_nulls, ep_min, ep_max
-          |) AS (col_name, n_nulls, min_s, max_s)""".stripMargin)
-        .join(dcnt, "col_name")
-        .join(hll, "col_name")
+      profileReport(p("st"), p("hll")).join(dcnt, "col_name")
         .select($"n_rows", $"col_name", $"n_nulls", $"n_distinct",
           $"ndv_hll",
           expr("(abs(ndv_hll - n_distinct) * 1000000L) div n_distinct")
@@ -2453,100 +1929,26 @@ object Streams extends QueryPack {
           $"min_s", $"max_s")
     }),
 
-    // Registers-only profile monitor — s48's PRODUCTION mode (VERDICT
-    // r18 #4): s48 is the audit form, carrying the exact distinct-
-    // value union beside the HLL registers to measure the estimator —
-    // the one corpus-scaling state in the monitor family, priced at
-    // its own bench line. This is the form a production profile
-    // writer actually runs once exactness is waived: per batch, ONE
-    // stats row + ≤4·32 register rows, and because register max is
-    // duplicate-insensitive the batch values feed [[Sketches
-    // .hllRegisterRows]] directly — no distinct() shuffle, no value
-    // set ever written or read. Post-drain: register-max semilattice
-    // merge + q214's integer-exact estimate. Gated by the same
-    // orders-profile oracle minus the exactness columns.
+    // Registers-only profile monitor — s48's PRODUCTION mode: s48 is
+    // the audit form, carrying the exact distinct-value union beside
+    // the HLL registers to measure the estimator — the one
+    // corpus-scaling state in the monitor family, priced at its own
+    // bench line. This is the form a production profile writer
+    // actually runs once exactness is waived: per batch, ONE stats row
+    // + ≤4·32 register rows, and because register max is
+    // duplicate-insensitive the batch values feed the register pass
+    // directly — no distinct() shuffle, no value set ever written or
+    // read. Post-drain: register-max semilattice merge + q214's
+    // integer-exact estimate. Gated by the same orders-profile oracle
+    // minus the exactness columns.
     "s59_stream_profile_registers" -> ((s, d) => {
       import s.implicits._
-      val name = ordersProfFixture(s, d)
-      val nOrd = T.orders(s, d).count()
-      val cap = math.max(50L, nOrd / 4)
-      val root = s"/tmp/graft_sprofr_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fsb = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsb.delete(new org.apache.hadoop.fs.Path(root), true)
-      val oSchema = StructType(Seq(
-        StructField("ck", LongType), StructField("st", StringType),
-        StructField("pc", LongType), StructField("ep", LongType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), oSchema).as("e"))
-        .select(col("e.ck").as("ck"), col("e.st").as("st"),
-          col("e.pc").as("pc"), col("e.ep").as("ep"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.agg(
-            count(lit(1)).cast("long").as("n_rows"),
-            sum(col("ck").isNull.cast("long")).cast("long").as("ck_nulls"),
-            min(col("ck")).as("ck_min"), max(col("ck")).as("ck_max"),
-            sum(col("st").isNull.cast("long")).cast("long").as("st_nulls"),
-            min(col("st")).as("st_min"), max(col("st")).as("st_max"),
-            sum(col("pc").isNull.cast("long")).cast("long").as("pc_nulls"),
-            min(col("pc")).as("pc_min"), max(col("pc")).as("pc_max"),
-            sum(col("ep").isNull.cast("long")).cast("long").as("ep_nulls"),
-            min(col("ep")).as("ep_min"), max(col("ep")).as("ep_max"))
-            .write.mode("overwrite").parquet(s"$root/st$batchId")
-          Sketches.hllRegisterRows(
-            batch.selectExpr(
-              "stack(4, 'o_custkey', CAST(ck AS STRING)," +
-                " 'o_orderstatus', st," +
-                " 'o_totalprice_cents', CAST(pc AS STRING)," +
-                " 'o_orderdate_epoch_s', CAST(ep AS STRING))" +
-                " AS (col_name, val)")
-              .filter(col("val").isNotNull)
-              .select(col("col_name"),
-                graft.functions.PortableHash.h60(col("val")).as("h")),
-            "col_name")
-            .write.mode("overwrite").parquet(s"$root/hll$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      val wide = s.read.schema("n_rows LONG, ck_nulls LONG, ck_min LONG, " +
-          "ck_max LONG, st_nulls LONG, st_min STRING, st_max STRING, " +
-          "pc_nulls LONG, pc_min LONG, pc_max LONG, ep_nulls LONG, " +
-          "ep_min LONG, ep_max LONG")
-        .parquet(s"$root/st*")
-        .agg(sum($"n_rows").cast("bigint").as("n_rows"),
-          sum($"ck_nulls").cast("bigint").as("ck_nulls"),
-          min($"ck_min").cast("string").as("ck_min"),
-          max($"ck_max").cast("string").as("ck_max"),
-          sum($"st_nulls").cast("bigint").as("st_nulls"),
-          min($"st_min").as("st_min"), max($"st_max").as("st_max"),
-          sum($"pc_nulls").cast("bigint").as("pc_nulls"),
-          min($"pc_min").cast("string").as("pc_min"),
-          max($"pc_max").cast("string").as("pc_max"),
-          sum($"ep_nulls").cast("bigint").as("ep_nulls"),
-          min($"ep_min").cast("string").as("ep_min"),
-          max($"ep_max").cast("string").as("ep_max"))
-      val hll = Sketches.hllEstimate(
-        s.read.schema("col_name STRING, j LONG, reg LONG")
-          .parquet(s"$root/hll*")
-          .groupBy($"col_name", $"j").agg(max($"reg").as("reg")),
-        "col_name")
-        .withColumnRenamed("est_hll", "ndv_hll")
-      wide.selectExpr("n_rows",
-        """stack(4,
-          |  'o_custkey',           ck_nulls, ck_min, ck_max,
-          |  'o_orderstatus',       st_nulls, st_min, st_max,
-          |  'o_totalprice_cents',  pc_nulls, pc_min, pc_max,
-          |  'o_orderdate_epoch_s', ep_nulls, ep_min, ep_max
-          |) AS (col_name, n_nulls, min_s, max_s)""".stripMargin)
-        .join(hll, "col_name")
+      val (name, in) = ordersProf(s, d)
+      val p = monitor(s, d, "sprofr", name, in) { (batch, emit) =>
+        emit("st", profileStats(batch))
+        emit("hll", profileRegisters(profileValues(batch)))
+      }
+      profileReport(p("st"), p("hll"))
         .select($"n_rows", $"col_name", $"n_nulls", $"ndv_hll",
           $"min_s", $"max_s")
     }),
@@ -2563,45 +1965,20 @@ object Streams extends QueryPack {
     // summary rows are written.
     "s60_stream_scenecut_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = docsLixFixture(s, d)
+      val name = docsLix(s, d)
       val nDocs = T.documents(s, d).count()
       val cap = math.max(10L, nDocs / 4)
-      val root = s"/tmp/graft_scut_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fsb = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsb.delete(new org.apache.hadoop.fs.Path(root), true)
-      val dSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), dSchema).as("e"))
-        .select(col("e.doc_id").as("doc_id"), col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch
-            .select(col("doc_id"),
-              encode(coalesce(col("text"), lit("")), "UTF-8").as("payload"))
-            .as[(Long, Array[Byte])]
-            .mapPartitions { rows =>
-              rows.map { case (id, bytes) => Multimodal.sceneCutsOf(id, bytes) }
-            }(Encoders.product[Multimodal.SceneCuts])
-            .toDF()
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      s.read.schema("doc_id LONG, n_frames LONG, n_cuts LONG, " +
-          "n_shots LONG, first_cut LONG, longest_shot LONG, " +
-          "mean_shot_milli LONG")
-        .parquet(s"$root/b*")
-        .select($"doc_id", $"n_frames", $"n_cuts", $"n_shots",
-          $"first_cut", $"longest_shot", $"mean_shot_milli")
+      val in = jsonStream(s, name, cap, docTextSchema)
+      monitor(s, d, "scut", name, in) { (batch, emit) =>
+        emit("b", batch
+          .select(col("doc_id"),
+            encode(coalesce(col("text"), lit("")), "UTF-8").as("payload"))
+          .as[(Long, Array[Byte])]
+          .mapPartitions { rows =>
+            rows.map { case (id, bytes) => Multimodal.sceneCutsOf(id, bytes) }
+          }(Encoders.product[Multimodal.SceneCuts])
+          .toDF())
+      }("b")
     }),
 
     // Streaming table-checksum monitor — q83's ingest-side form and
@@ -2617,63 +1994,37 @@ object Streams extends QueryPack {
     "s49_stream_checksum_monitor" -> ((s, d) => {
       import s.implicits._
       val h60 = graft.functions.PortableHash.h60 _
-      val name = s"tables_ck_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val cents = graft.functions.Exact.cents _
-          val rows = T.orders(s, d)
-            .select(($"o_orderkey" * 4).as("id"),
-              lit("orders").as("t"),
-              concat_ws("|", $"o_orderkey", $"o_custkey",
-                cents($"o_totalprice"),
-                unix_timestamp($"o_orderdate")).as("r"))
-            .unionAll(T.lineitem(s, d)
-              .select((($"l_orderkey" * 8 + $"l_linenumber") * 4 + 1)
-                .as("id"), lit("lineitem").as("t"),
-                concat_ws("|", $"l_orderkey", $"l_linenumber",
-                  $"l_quantity".cast("long"),
-                  cents($"l_extendedprice")).as("r")))
-            .unionAll(T.customer(s, d)
-              .select(($"c_custkey" * 4 + 2).as("id"),
-                lit("customer").as("t"),
-                concat_ws("|", $"c_custkey", $"c_name",
-                  cents($"c_acctbal")).as("r")))
-            .select($"id", $"id".as("pk"),
-              to_json(struct($"t", $"r")).as("json"))
-            .orderBy("id").toLocalIterator()
-          seedRows(name, numShards = 4, rows, times = 1)
-        }
+      val name = fixture(s"tables_ck_${sfx(d)}", 4) {
+        val cents = graft.functions.Exact.cents _
+        T.orders(s, d)
+          .select(($"o_orderkey" * 4).as("id"),
+            lit("orders").as("t"),
+            concat_ws("|", $"o_orderkey", $"o_custkey",
+              cents($"o_totalprice"),
+              unix_timestamp($"o_orderdate")).as("r"))
+          .unionAll(T.lineitem(s, d)
+            .select((($"l_orderkey" * 8 + $"l_linenumber") * 4 + 1)
+              .as("id"), lit("lineitem").as("t"),
+              concat_ws("|", $"l_orderkey", $"l_linenumber",
+                $"l_quantity".cast("long"),
+                cents($"l_extendedprice")).as("r")))
+          .unionAll(T.customer(s, d)
+            .select(($"c_custkey" * 4 + 2).as("id"),
+              lit("customer").as("t"),
+              concat_ws("|", $"c_custkey", $"c_name",
+                cents($"c_acctbal")).as("r")))
+          .select($"id", $"id".as("pk"), to_json(struct($"t", $"r")).as("json"))
       }
       val nRows = T.orders(s, d).count() + T.lineitem(s, d).count() +
         T.customer(s, d).count()
       val cap = math.max(100L, nRows / 4)
-      val root = s"/tmp/graft_sck_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fsb = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsb.delete(new org.apache.hadoop.fs.Path(root), true)
-      val ckSchema = StructType(Seq(
-        StructField("t", StringType), StructField("r", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), ckSchema).as("e"))
-        .select(col("e.t").as("t"), col("e.r").as("r"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.select(col("t"), h60(col("r")).as("h"))
-            .groupBy(col("t"))
-            .agg(count(lit(1)).cast("long").as("n"),
-              expr("bit_xor(h)").as("x"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      s.read.schema("t STRING, n LONG, x LONG").parquet(s"$root/b*")
+      val in = jsonStream(s, name, cap, StructType(Seq(
+        StructField("t", StringType), StructField("r", StringType))))
+      monitor(s, d, "sck", name, in) { (batch, emit) =>
+        emit("b", batch.select(col("t"), h60(col("r")).as("h"))
+          .groupBy(col("t"))
+          .agg(count(lit(1)).cast("long").as("n"), expr("bit_xor(h)").as("x")))
+      }("b")
         .groupBy($"t")
         .agg(sum($"n").cast("bigint").as("n_rows"),
           expr("bit_xor(x)").as("xor_fp"))
@@ -2695,62 +2046,32 @@ object Streams extends QueryPack {
     "s50_stream_novelty_monitor" -> ((s, d) => {
       import s.implicits._
       val h60 = graft.functions.PortableHash.h60 _
-      val name = s"docs_nov_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.documents(s, d)
-            .select(col("doc_id"), col("doc_id").as("pk"),
-              to_json(struct(col("doc_id"), col("text"))).as("json"))
-            .orderBy("doc_id").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
-      }
+      val name = fixture(s"docs_nov_${sfx(d)}", 2)(docsText(s, d, lit(true)))
       val nDocs = T.documents(s, d).count()
       val cap = math.max(10L, nDocs / 4)
-      val root = s"/tmp/graft_snov_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fsb = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsb.delete(new org.apache.hadoop.fs.Path(root), true)
-      val docSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), docSchema).as("e"))
-        .select(col("e.doc_id").as("doc_id"), col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val grams = batch
-            .withColumn("w", split(col("text"), " "))
-            .filter(size(col("w")) >= 3)
-            .select(col("doc_id"), explode(
-              expr("transform(sequence(1, size(w) - 2), " +
-                "i -> concat_ws(' ', slice(w, i, 3)))")).as("gram"))
-            .select(col("doc_id"), h60(col("gram")).as("gh"))
-            .distinct()
-            .localCheckpoint() // two consumers inside the batch
-          grams.groupBy(col("doc_id"))
-            .agg(count(lit(1)).cast("long").as("n_grams"))
-            .write.mode("overwrite").parquet(s"$root/d$batchId")
-          grams.groupBy(col("gh"))
-            .agg(count(lit(1)).cast("long").as("nd"),
-              min(col("doc_id")).as("own"))
-            .write.mode("overwrite").parquet(s"$root/g$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      val uniq = s.read.schema("gh LONG, nd LONG, own LONG")
-        .parquet(s"$root/g*")
+      val in = jsonStream(s, name, cap, docTextSchema)
+      val p = monitor(s, d, "snov", name, in) { (batch, emit) =>
+        val grams = batch
+          .withColumn("w", split(col("text"), " "))
+          .filter(size(col("w")) >= 3)
+          .select(col("doc_id"), explode(
+            expr("transform(sequence(1, size(w) - 2), " +
+              "i -> concat_ws(' ', slice(w, i, 3)))")).as("gram"))
+          .select(col("doc_id"), h60(col("gram")).as("gh"))
+          .distinct()
+          .localCheckpoint() // two consumers inside the batch
+        emit("d", grams.groupBy(col("doc_id"))
+          .agg(count(lit(1)).cast("long").as("n_grams")))
+        emit("g", grams.groupBy(col("gh"))
+          .agg(count(lit(1)).cast("long").as("nd"),
+            min(col("doc_id")).as("own")))
+      }
+      val uniq = p("g")
         .groupBy($"gh")
         .agg(sum($"nd").cast("bigint").as("ndt"), min($"own").as("own"))
         .filter($"ndt" === 1L)
         .groupBy($"own").agg(count(lit(1)).cast("bigint").as("n_unique"))
-      s.read.schema("doc_id LONG, n_grams LONG").parquet(s"$root/d*")
+      p("d")
         .groupBy($"doc_id")
         .agg(sum($"n_grams").cast("bigint").as("n_grams"))
         .join(uniq.select($"own".as("doc_id"), $"n_unique"),
@@ -2775,46 +2096,28 @@ object Streams extends QueryPack {
     "s51_stream_kmv_monitor" -> ((s, d) => {
       import s.implicits._
       val h60 = graft.functions.PortableHash.h60 _
-      val name = s"events_rt_${sfx(d)}" // shares s01's fixture
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val nEv = T.events(s, d).count()
       val cap = math.max(1000L, nEv / 4)
-      val root = s"/tmp/graft_skmv_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fsb = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsb.delete(new org.apache.hadoop.fs.Path(root), true)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(col("e.event_type").as("t"),
-          col("e.user_id").as("user_id"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val hv = batch.select(col("t"), h60(col("user_id")).as("hv"))
-            .distinct()
-            .localCheckpoint() // synopsis AND audit read it
-          val wt = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("t")).orderBy(col("hv"))
-          hv.withColumn("rn", row_number().over(wt))
-            .filter(col("rn") <= 64)
-            .select(col("t"), col("hv"))
-            .write.mode("overwrite").parquet(s"$root/g$batchId")
-          hv.write.mode("overwrite").parquet(s"$root/e$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val in = jsonStream(s, name, cap, payloadSchema)
+        .select(col("event_type").as("t"), col("user_id"))
+      val p = monitor(s, d, "skmv", name, in) { (batch, emit) =>
+        val hv = batch.select(col("t"), h60(col("user_id")).as("hv"))
+          .distinct()
+          .localCheckpoint() // synopsis AND audit read it
+        val wt = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("t")).orderBy(col("hv"))
+        emit("g", hv.withColumn("rn", row_number().over(wt))
+          .filter(col("rn") <= 64)
+          .select(col("t"), col("hv")))
+        emit("e", hv)
+      }
       val kmv = udaf(new graft.functions.KmvSketch(64),
         Encoders.scalaLong)
-      val est = s.read.schema("t STRING, hv LONG").parquet(s"$root/g*")
+      val est = p("g")
         .distinct()
         .groupBy($"t").agg(round(kmv($"hv"), 4).as("est_distinct"))
-      s.read.schema("t STRING, hv LONG").parquet(s"$root/e*")
+      p("e")
         .distinct()
         .groupBy($"t").agg(countDistinct($"hv").as("true_distinct"))
         .join(est, "t")
@@ -2830,39 +2133,17 @@ object Streams extends QueryPack {
     // |sources|·4 longs of state.
     "s52_stream_readability_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = docsLixFixture(s, d)
+      val name = docsLix(s, d)
       val nDocs = T.documents(s, d).count()
       val cap = math.max(10L, nDocs / 4)
-      val root = s"/tmp/graft_slix_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fsb = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsb.delete(new org.apache.hadoop.fs.Path(root), true)
-      val dSchema = StructType(Seq(
-        StructField("source", StringType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), dSchema).as("e"))
-        .select(col("e.source").as("source"), col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // the batch twin's OWN count expressions (ADVICE r17:
-          // factored, not re-inlined — if q342's scoring changes, the
-          // monitor moves with it)
-          TextAnalysis.lixCounts(batch)
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val in = jsonStream(s, name, cap, docsSourceSchema)
+      // the batch twin's own count expressions: if q342's scoring
+      // changes, the monitor moves with it
+      val counts = monitor(s, d, "slix", name, in) { (batch, emit) =>
+        emit("b", TextAnalysis.lixCounts(batch))
+      }("b")
       TextAnalysis.lixReport(
-        s.read.schema("source STRING, n_docs LONG, n_words LONG, " +
-            "n_sents LONG, n_long LONG")
-          .parquet(s"$root/b*")
+        counts
           .groupBy($"source")
           .agg(sum($"n_docs").cast("bigint").as("n_docs"),
             sum($"n_words").cast("bigint").as("n_words"),
@@ -2878,36 +2159,16 @@ object Streams extends QueryPack {
     // own oracle. The compression-floor dial, tracked during ingest.
     "s53_stream_entropy_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = docsLixFixture(s, d)
+      val name = docsLix(s, d)
       val nDocs = T.documents(s, d).count()
       val cap = math.max(10L, nDocs / 4)
-      val root = s"/tmp/graft_sent_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fsb = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsb.delete(new org.apache.hadoop.fs.Path(root), true)
-      val dSchema = StructType(Seq(
-        StructField("source", StringType), StructField("text", StringType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), dSchema).as("e"))
-        .select(col("e.source").as("source"), col("e.text").as("text"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q344's OWN histogram expressions (the lixCounts rule)
-          TextAnalysis.charHist(batch)
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val in = jsonStream(s, name, cap, docsSourceSchema)
+      // q344's own histogram expressions (the lixCounts rule)
+      val hist = monitor(s, d, "sent", name, in) { (batch, emit) =>
+        emit("b", TextAnalysis.charHist(batch))
+      }("b")
       TextAnalysis.entropyReport(
-        s.read.schema("source STRING, ch STRING, nc LONG")
-          .parquet(s"$root/b*")
+        hist
           .groupBy($"source", $"ch")
           .agg(sum($"nc").cast("long").as("nc")))
     }),
@@ -2922,20 +2183,13 @@ object Streams extends QueryPack {
     // on read.
     "s54_stream_haar_monitor" -> ((s, d) => {
       import s.implicits._
-      val (rawDays, root) = eventsDayMonitor(s, d, "shaar")
-      val raw = rawDays.filter(col("p") === 1L).select(col("day"))
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy(col("day"))
-            .agg(count(lit(1)).cast("long").as("x"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val (name, days) = eventsDays(s, d)
+      val in = days.filter(col("p") === 1L).select(col("day"))
+      val counts = monitor(s, d, "shaar", name, in) { (batch, emit) =>
+        emit("b", batch.groupBy(col("day")).agg(count(lit(1)).cast("long").as("x")))
+      }("b")
       Events.haarReport(
-        s.read.schema("day STRING, x LONG").parquet(s"$root/b*")
-          .groupBy($"day").agg(sum($"x").cast("long").as("x"))
+        counts.groupBy($"day").agg(sum($"x").cast("long").as("x"))
           .select(datediff($"day".cast("date"), to_date(lit("2024-01-01")))
             .cast("long").as("day"), $"x"))
     }),
@@ -2949,25 +2203,19 @@ object Streams extends QueryPack {
     // maintained during ingest for |cells| longs of state.
     "s55_stream_wilson_monitor" -> ((s, d) => {
       import s.implicits._
-      val (raw, root) = eventsDayMonitor(s, d, "swil")
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // arithmetic dow from the day string — identical to q349's
-          // (epoch_days + 4) % 7 since day = to_date(ts)
-          batch.select(
+      val (name, days) = eventsDays(s, d)
+      val counts = monitor(s, d, "swil", name, days) { (batch, emit) =>
+        // arithmetic dow from the day string — identical to q349's
+        // (epoch_days + 4) % 7 since day = to_date(ts)
+        emit("b", batch.select(
             ((datediff(col("day").cast("date"), to_date(lit("1970-01-01")))
               .cast("long") + 4L) % 7L).as("dow"), col("p"))
-            .groupBy(col("dow"))
-            .agg(count(lit(1)).cast("long").as("n_events"),
-              sum(col("p")).cast("long").as("n_purch"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+          .groupBy(col("dow"))
+          .agg(count(lit(1)).cast("long").as("n_events"),
+            sum(col("p")).cast("long").as("n_purch")))
+      }("b")
       Events.wilsonReport(
-        s.read.schema("dow LONG, n_events LONG, n_purch LONG")
-          .parquet(s"$root/b*")
+        counts
           .groupBy($"dow")
           .agg(sum($"n_events").cast("bigint").as("n_events"),
             sum($"n_purch").cast("bigint").as("n_purch")))
@@ -2981,20 +2229,14 @@ object Streams extends QueryPack {
     // randomness dial over the ingest series, |days| longs of state.
     "s56_stream_runs_monitor" -> ((s, d) => {
       import s.implicits._
-      val (raw, root) = eventsDayMonitor(s, d, "sruns")
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy(col("day"))
-            .agg(count(lit(1)).cast("long").as("n_ev"),
-              sum(col("p")).cast("long").as("np"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val (name, days) = eventsDays(s, d)
+      val counts = monitor(s, d, "sruns", name, days) { (batch, emit) =>
+        emit("b", batch.groupBy(col("day"))
+          .agg(count(lit(1)).cast("long").as("n_ev"),
+            sum(col("p")).cast("long").as("np")))
+      }("b")
       Events.runsFromDaily(
-        s.read.schema("day STRING, n_ev LONG, np LONG")
-          .parquet(s"$root/b*")
+        counts
           .groupBy($"day")
           .agg(sum($"n_ev").cast("long").as("n_ev"),
             sum($"np").cast("long").as("np"))
@@ -3012,28 +2254,22 @@ object Streams extends QueryPack {
     // K·2 longs: the design bounds the state, not the data.
     "s57_stream_obf_monitor" -> ((s, d) => {
       import s.implicits._
-      val (raw, root) = eventsDayMonitor(s, d, "sobf")
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q355's OWN look assignment from the day string — identical
-          // to its least(greatest(offset, 0) div 8, 3) + 1 (the
-          // non-negative numerator keeps Spark div == DuckDB //)
-          batch.select(
+      val (name, days) = eventsDays(s, d)
+      val counts = monitor(s, d, "sobf", name, days) { (batch, emit) =>
+        // q355's own look assignment from the day string — identical
+        // to its least(greatest(offset, 0) div 8, 3) + 1 (the
+        // non-negative numerator keeps Spark div == DuckDB //)
+        emit("b", batch.select(
             expr("least(greatest(datediff(to_date(day), " +
               "DATE '2024-01-01'), 0) div 8, 3) + 1")
               .cast("long").as("look"),
             col("p"))
-            .groupBy(col("look"))
-            .agg(count(lit(1)).cast("long").as("n_events"),
-              sum(col("p")).cast("long").as("n_purch"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+          .groupBy(col("look"))
+          .agg(count(lit(1)).cast("long").as("n_events"),
+            sum(col("p")).cast("long").as("n_purch")))
+      }("b")
       Pipeline.obfReport(
-        s.read.schema("look LONG, n_events LONG, n_purch LONG")
-          .parquet(s"$root/b*")
+        counts
           .groupBy($"look")
           .agg(sum($"n_events").cast("bigint").as("n_events"),
             sum($"n_purch").cast("bigint").as("n_purch")))
@@ -3041,7 +2277,7 @@ object Streams extends QueryPack {
 
     // Streaming Bradley–Terry preference monitor — q356's ingest-side
     // form, closing the preference-data family on the path where
-    // preference data actually arrives (VERDICT r18 #5). The win
+    // preference data actually arrives. The win
     // matrix is NOT batch-linear — a user's a-beats-b verdict depends
     // on TOTAL counts, so per-batch (winner, loser) rows would be
     // wrong whenever a user spans batches. The per-(user, type)
@@ -3057,36 +2293,16 @@ object Streams extends QueryPack {
     // pairwise verdict.
     "s58_stream_bt_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = s"events_rt_${sfx(d)}" // shares s01/s04's full fixture
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val nEv = T.events(s, d).count()
       val cap = math.max(10L, nEv / 4)
-      val root = s"/tmp/graft_sbt_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(col("e.user_id").as("user_id"),
-          col("e.event_type").as("event_type"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy(col("user_id"), col("event_type"))
-            .agg(count(lit(1)).cast("long").as("c"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val in = jsonStream(s, name, cap, payloadSchema)
+      val counts = monitor(s, d, "sbt", name, in) { (batch, emit) =>
+        emit("b", batch.groupBy(col("user_id"), col("event_type"))
+          .agg(count(lit(1)).cast("long").as("c")))
+      }("b")
       Pipeline.btReport(
-        s.read.schema("user_id LONG, event_type STRING, c LONG")
-          .parquet(s"$root/b*")
+        counts
           .groupBy($"user_id", $"event_type")
           .agg(sum($"c").cast("long").as("c")))
     }),
@@ -3101,19 +2317,14 @@ object Streams extends QueryPack {
     // own oracle (the s38/s39 discipline).
     "s44_stream_sprt_monitor" -> ((s, d) => {
       import s.implicits._
-      val (raw, root) = eventsDayMonitor(s, d, "ssprt")
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy(col("day"))
-            .agg(count(lit(1)).cast("long").as("n"),
-              sum(col("p")).cast("long").as("x"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val (name, days) = eventsDays(s, d)
+      val counts = monitor(s, d, "ssprt", name, days) { (batch, emit) =>
+        emit("b", batch.groupBy(col("day"))
+          .agg(count(lit(1)).cast("long").as("n"),
+            sum(col("p")).cast("long").as("x")))
+      }("b")
       Pipeline.sprtReport(
-        s.read.schema("day STRING, n LONG, x LONG").parquet(s"$root/b*")
+        counts
           .groupBy($"day")
           .agg(sum($"n").cast("bigint").as("n_events"),
             sum($"x").cast("bigint").as("n_purch"))
@@ -3132,45 +2343,18 @@ object Streams extends QueryPack {
     // Gated by q332's own oracle (the s38/s39 discipline).
     "s43_stream_qdigest_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = s"orders_qdig_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.orders(s, d)
-            .select($"o_orderkey", $"o_orderkey".as("pk"),
-              to_json(struct(
-                expr(graft.functions.Exact.centsSql("o_totalprice"))
-                  .as("c"))).as("json"))
-            .orderBy("o_orderkey").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
+      val name = fixture(s"orders_qdig_${sfx(d)}", 2) {
+        T.orders(s, d).select($"o_orderkey", $"o_orderkey".as("pk"),
+          to_json(struct(expr(graft.functions.Exact.centsSql("o_totalprice"))
+            .as("c"))).as("json"))
       }
       val nOrd = T.orders(s, d).count()
       val cap = math.max(10L, nOrd / 4)
-      val root = s"/tmp/graft_sqdig_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val cSchema = StructType(Seq(StructField("c", LongType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), cSchema).as("e"))
-        .select(col("e.c").as("c"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.select(least(expr("c div 262144"), lit(255L)).as("leaf"))
-            .groupBy(col("leaf")).agg(count(lit(1)).cast("long").as("cnt"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      val merged = s.read.schema("leaf LONG, cnt LONG")
-        .parquet(s"$root/b*")
+      val in = jsonStream(s, name, cap, StructType(Seq(StructField("c", LongType))))
+      val merged = monitor(s, d, "sqdig", name, in) { (batch, emit) =>
+        emit("b", batch.select(least(expr("c div 262144"), lit(255L)).as("leaf"))
+          .groupBy(col("leaf")).agg(count(lit(1)).cast("long").as("cnt")))
+      }("b")
         .groupBy($"leaf").agg(sum($"cnt").cast("long").as("cnt"))
       val cents = T.orders(s, d)
         .select(expr(graft.functions.Exact.centsSql("o_totalprice")).as("c"))
@@ -3189,44 +2373,18 @@ object Streams extends QueryPack {
     // the op is gated by q214's own oracle (the s38/s39 discipline).
     "s42_stream_hll_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = s"orders_hll_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.orders(s, d)
-            .select($"o_orderkey", $"o_orderkey".as("pk"),
-              to_json(struct($"o_orderstatus".as("st"),
-                $"o_custkey".as("cu"))).as("json"))
-            .orderBy("o_orderkey").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
+      val name = fixture(s"orders_hll_${sfx(d)}", 2) {
+        T.orders(s, d).select($"o_orderkey", $"o_orderkey".as("pk"),
+          to_json(struct($"o_orderstatus".as("st"), $"o_custkey".as("cu"))).as("json"))
       }
       val nOrd = T.orders(s, d).count()
       val cap = math.max(10L, nOrd / 4)
-      val root = s"/tmp/graft_shll_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val ordSchema = StructType(Seq(
-        StructField("st", StringType), StructField("cu", LongType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), ordSchema).as("e"))
-        .select(col("e.st").as("event_type"), col("e.cu").as("user_id"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          Sketches.hllRegisters(batch)
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      val merged = s.read.schema("event_type STRING, j LONG, reg LONG")
-        .parquet(s"$root/b*")
+      val in = jsonStream(s, name, cap, StructType(Seq(
+          StructField("st", StringType), StructField("cu", LongType))))
+        .select(col("st").as("event_type"), col("cu").as("user_id"))
+      val merged = monitor(s, d, "shll", name, in) { (batch, emit) =>
+        emit("b", Sketches.hllRegisters(batch))
+      }("b")
         .groupBy($"event_type", $"j").agg(max($"reg").as("reg"))
       Sketches.hllReport(merged, Sketches.hllInput(s, d))
     }),
@@ -3244,50 +2402,21 @@ object Streams extends QueryPack {
     // gated by q328's own oracle (the s38/s39 discipline).
     "s41_stream_psi_monitor" -> ((s, d) => {
       import s.implicits._
-      val name = s"orders_psi_${sfx(d)}"
-      synchronized {
-        if (!ShardServiceRegistry.exists(name)) {
-          val rows = T.orders(s, d)
-            .select($"o_orderkey", $"o_orderkey".as("pk"),
-              to_json(struct($"o_orderkey".as("k"),
-                graft.functions.Exact.cents($"o_totalprice").as("c"),
-                unix_micros($"o_orderdate".cast("timestamp")).as("ep")))
-                .as("json"))
-            .orderBy("o_orderkey").toLocalIterator()
-          seedRows(name, numShards = 2, rows, times = 1)
-        }
+      val name = fixture(s"orders_psi_${sfx(d)}", 2) {
+        T.orders(s, d).select($"o_orderkey", $"o_orderkey".as("pk"),
+          to_json(struct($"o_orderkey".as("k"),
+            graft.functions.Exact.cents($"o_totalprice").as("c"),
+            unix_micros($"o_orderdate".cast("timestamp")).as("ep"))).as("json"))
       }
       val nOrd = T.orders(s, d).count()
       val cap = math.max(10L, nOrd / 4)
-      val root = s"/tmp/graft_spsi_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val ordSchema = StructType(Seq(
-        StructField("k", LongType), StructField("c", LongType),
-        StructField("ep", LongType)))
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), ordSchema).as("e"))
-        .select(col("e.c").as("c"), col("e.ep").as("ep"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.select(least(expr("c div 4000000"), lit(9L)).as("band"),
-              col("ep"))
-            .groupBy(col("band"), col("ep"))
-            .agg(count(lit(1)).cast("long").as("n"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
-      val hist = s.read.schema("band LONG, ep LONG, n LONG")
-        .parquet(s"$root/b*")
+      val in = jsonStream(s, name, cap, StructType(Seq(
+        StructField("c", LongType), StructField("ep", LongType))))
+      val hist = monitor(s, d, "spsi", name, in) { (batch, emit) =>
+        emit("b", batch.select(least(expr("c div 4000000"), lit(9L)).as("band"), col("ep"))
+          .groupBy(col("band"), col("ep"))
+          .agg(count(lit(1)).cast("long").as("n")))
+      }("b")
         .groupBy($"band", $"ep").agg(sum($"n").cast("long").as("n"))
       val sp = hist.agg(min($"ep").as("lo"), max($"ep").as("hi"))
       Pipeline.psiReport(hist.crossJoin(broadcast(sp))
@@ -3300,8 +2429,7 @@ object Streams extends QueryPack {
 
     "s37_stream_temporal_join" -> ((s, d) => {
       import s.implicits._
-      val name = s"events_rt_${sfx(d)}" // shared fixture
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val inf = 4611686018427387904L // 2^62 open-version sentinel
       val wU = org.apache.spark.sql.expressions.Window
         .partitionBy($"user_id").orderBy($"us", $"id")
@@ -3318,45 +2446,25 @@ object Streams extends QueryPack {
           $"eff_to_us", $"eff_to_id")
         .cache()
       val cap = math.max(1000L, T.events(s, d).count() / 4)
-      val root = s"/tmp/graft_tjoin_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .filter(col("e.event_type") === "purchase")
-        .select(col("e.event_id").as("event_id"),
-          col("e.user_id").as("user_id"), col("e.ts_us").as("ts_us"))
-      graft.streaming.StreamObservability.attach(s)
-      val q = raw.writeStream.outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.join(dim,
-            batch("user_id") === dim("d_uid") &&
-              (dim("eff_from_us") < batch("ts_us") ||
-                (dim("eff_from_us") === batch("ts_us") &&
-                  dim("eff_from_id") <= batch("event_id"))) &&
-              (batch("ts_us") < dim("eff_to_us") ||
-                (batch("ts_us") === dim("eff_to_us") &&
-                  batch("event_id") < dim("eff_to_id"))),
-            "left")
-            .select(col("event_id"), col("user_id"), col("ts_us"),
-              coalesce(col("attr"), lit("none")).as("attr_at_purchase"),
-              coalesce(col("eff_from_id"), lit(-1L)).as("version_id"))
-            .write.mode("overwrite").parquet(s"$root/b$batchId")
-          ()
-        }.start()
-      q.awaitTermination()
+      val in = jsonStream(s, name, cap, payloadSchema)
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), col("ts_us"))
+      val out = monitor(s, d, "tjoin", name, in) { (batch, emit) =>
+        emit("b", batch.join(dim,
+          batch("user_id") === dim("d_uid") &&
+            (dim("eff_from_us") < batch("ts_us") ||
+              (dim("eff_from_us") === batch("ts_us") &&
+                dim("eff_from_id") <= batch("event_id"))) &&
+            (batch("ts_us") < dim("eff_to_us") ||
+              (batch("ts_us") === dim("eff_to_us") &&
+                batch("event_id") < dim("eff_to_id"))),
+          "left")
+          .select(col("event_id"), col("user_id"), col("ts_us"),
+            coalesce(col("attr"), lit("none")).as("attr_at_purchase"),
+            coalesce(col("eff_from_id"), lit(-1L)).as("version_id")))
+      }("b")
       dim.unpersist() // only the micro-batch interval joins read it
-      s.read.schema("event_id LONG, user_id LONG, ts_us LONG, " +
-        "attr_at_purchase STRING, version_id LONG").parquet(s"$root/b*")
-        .select($"event_id", $"user_id", $"ts_us", $"attr_at_purchase",
-          $"version_id")
+      out
     }),
 
     // Streaming CEP funnel — q81's per-user view → click-after-view →
@@ -3372,18 +2480,10 @@ object Streams extends QueryPack {
     // late, or out of order flips a user's stage and fails the hash.
     "s36_stream_funnel" -> ((s, d) => {
       import s.implicits._
-      val name = s"events_rt_${sfx(d)}" // shares s01/s12's fixture
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val cap = math.max(1000L, T.events(s, d).count() / 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-      val ev = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(col("e.user_id").as("user_id"), col("e.event_id").as("event_id"),
-          col("e.ts_us").as("ts_us"), col("e.event_type").as("event_type"))
+      val ev = jsonStream(s, name, cap, payloadSchema)
+        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
         .as[(Long, Long, Long, String)]
       s.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -3416,18 +2516,10 @@ object Streams extends QueryPack {
     // reduction as s10).
     "s12_transform_with_state" -> ((s, d) => {
       import s.implicits._
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val cap = math.max(1000L, T.events(s, d).count() / 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-      val ev = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(col("e.user_id").as("user_id"), col("e.ts_us").as("ts_us"))
-        .as[(Long, Long)]
+      val ev = jsonStream(s, name, cap, payloadSchema)
+        .select(col("user_id"), col("ts_us")).as[(Long, Long)]
       // transformWithState requires the RocksDB provider; restore the
       // default afterwards so other streaming queries keep the HDFS
       // store (conf is read once at query start — drain() blocks to
@@ -3464,7 +2556,7 @@ object Streams extends QueryPack {
     // batch aggregate.
     "s17_shard_split_replay" -> ((s, d) => {
       val name = s"events_resh_${sfx(d)}"
-      synchronized { // same mid-seed-visibility rule as seedEventsJson
+      synchronized { // same mid-seed-visibility rule as fixture()
         if (!ShardServiceRegistry.exists(name)) {
           val src = T.events(s, d)
             .select(col("user_id"), col("event_id"))
@@ -3556,27 +2648,14 @@ object Streams extends QueryPack {
     // idempotent, so at-least-once batch replay converges to the same
     // table. Final table == the batch last-event-per-user oracle.
     "s13_stream_upsert" -> ((s, d) => {
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val cap = math.max(1000L, T.events(s, d).count() / 4)
-      // applicationId suffix: a concurrent run against the same dataset
-      // must not interleave generations with this one
-      val root = s"/tmp/graft_upsert_${sfx(d)}" +
-        s"_${s.sparkContext.applicationId.replaceAll("[^A-Za-z0-9]", "_")}"
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
+      val root = scratch(s, d, "upsert")
       val gen = new AtomicInteger(0)
-      val ev = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-        .select(from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .select(col("e.user_id").as("user_id"), col("e.event_id").as("event_id"),
-          col("e.ts_us").as("ts_us"), col("e.event_type").as("event_type"))
+      val ev = jsonStream(s, name, cap, payloadSchema)
+        .select(col("user_id"), col("event_id"), col("ts_us"), col("event_type"))
       graft.streaming.StreamObservability.attach(s)
-      val q = ev.writeStream.outputMode("append")
+      ev.writeStream.outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val ss = batch.sparkSession
@@ -3592,8 +2671,7 @@ object Streams extends QueryPack {
             .write.mode("overwrite").parquet(s"$root/g${g + 1}")
           gen.incrementAndGet()
           ()
-        }.start()
-      q.awaitTermination()
+        }.start().awaitTermination()
       s.read.parquet(s"$root/g${gen.get()}")
         .select(col("user_id"), col("ts_us").as("last_ts_us"),
           col("event_id").as("last_event_id"), col("event_type").as("last_event_type"))
@@ -3621,20 +2699,12 @@ object Streams extends QueryPack {
     // list_reduce over the event_id-ordered purchase list.
     "s25_stream_ewma_alerts" -> ((s, d) => {
       import s.implicits._
-      val name = s"events_rt_${sfx(d)}" // same fixture as s01/s10
-      seedEventsJson(s, d, name, numShards = 4)
+      val name = eventsRt(s, d)
       val cap = math.max(1000L, T.events(s, d).count() / 4)
-      val raw = s.readStream.format("shardstream")
-        .option("stream", name)
-        .option("startingPosition", "trim_horizon")
-        .option("maxRecordsPerBatch", cap.toString)
-        .load()
-      val ev = raw.select(
-        from_json(col("data").cast("string"), payloadSchema).as("e"))
-        .filter(col("e.event_type") === "purchase")
-        .select(col("e.user_id").as("user_id"),
-          col("e.event_id").as("event_id"),
-          expr("CAST(round(e.value * 100) AS BIGINT)").as("v_c"))
+      val ev = jsonStream(s, name, cap, payloadSchema)
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id"),
+          expr("CAST(round(value * 100) AS BIGINT)").as("v_c"))
         .filter(col("v_c") >= 0)
         .as[(Long, Long, Long)]
       val alerts = ev.groupByKey(_._1)
@@ -3953,7 +3023,7 @@ object Streams extends QueryPack {
     // semilattice/union partials (s48) merge exactly
     "s47_stream_bloom_monitor" -> Sketches.oracles("q311_bloom_size_tune"),
     // q113's profile oracle EXTENDED with q214's integer-exact HLL
-    // replay per column (VERDICT r17 #2): the exact columns are the
+    // replay per column: the exact columns are the
     // same chain q113 gates, the ndv_hll/ndv_err_ppm columns re-derive
     // the m=32 register bank from each column's distinct value strings
     "s48_stream_profile_monitor" ->

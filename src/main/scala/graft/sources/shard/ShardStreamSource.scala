@@ -282,18 +282,25 @@ class ShardMicroBatchStream(opts: ShardSourceOptions, checkpointLocation: String
     val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
     val fs = path.getFileSystem(conf)
 
-    def readPersisted(): Option[Map[String, Long]] =
-      try {
-        val in = fs.open(path)
+    // Only a missing, empty or unparsable file counts as absent. An
+    // open or read failure propagates: mapping it to None would
+    // re-resolve the start from the live service and overwrite the
+    // persisted baseline (a silent `latest` drift).
+    def readPersisted(): Option[Map[String, Long]] = {
+      val text =
         try {
-          val bytes = new Array[Byte](fs.getFileStatus(path).getLen.toInt)
-          in.readFully(bytes)
-          val m = ShardStreamOffset.fromJson(new String(bytes, UTF_8)).indexes
-          // a stream always has >= 1 shard; empty means a truncated
-          // write (crash between create and close) — treat as absent
-          if (m.nonEmpty) Some(m) else None
-        } finally in.close()
-      } catch { case scala.util.control.NonFatal(_) => None }
+          val in = fs.open(path)
+          try {
+            val bytes = new Array[Byte](fs.getFileStatus(path).getLen.toInt)
+            in.readFully(bytes)
+            new String(bytes, UTF_8)
+          } finally in.close()
+        } catch { case _: java.io.FileNotFoundException => "" }
+      // a stream always has >= 1 shard; empty means a truncated write
+      // (crash between create and close)
+      try Some(ShardStreamOffset.fromJson(text).indexes).filter(_.nonEmpty)
+      catch { case scala.util.control.NonFatal(_) => None }
+    }
 
     def resolveAndPersist(): Map[String, Long] = {
       val resolved = ShardPositions.startIndexes(opts)

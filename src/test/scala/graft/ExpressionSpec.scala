@@ -171,6 +171,88 @@ class ExpressionSpec extends AnyFunSuite with BeforeAndAfterAll {
       ex.getMessage.toLowerCase.contains("data type mismatch"))
   }
 
+  test("window_hashes decodes a string that ends mid-sequence without reading past it") {
+    val sp = spark
+    import sp.implicits._
+    // cast from binary: a truncated 3-byte, 4-byte and 2-byte sequence,
+    // each after valid code points
+    val raw = Seq(
+      Array(0x41, 0xE2, 0x82),
+      Array(0xE6, 0x97, 0xA5, 0xE6, 0x9C),
+      Array(0x61, 0x62, 0xF0, 0x9F),
+      Array(0x7A, 0xC3)).map(_.map(_.toByte))
+    val results = for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) yield {
+      sp.conf.set("spark.sql.codegen.factoryMode", codegen)
+      val rows = raw.toDF("b")
+        .select(length($"b".cast("string")).as("len"),
+          expr("window_hashes(CAST(b AS STRING), 1)").as("w1"),
+          expr("window_hashes(CAST(b AS STRING), 2)").as("w2"))
+        .collect()
+      rows.foreach { r =>
+        val len = r.getInt(0)
+        assert(r.getSeq[Long](1).length == len, s"mode=$codegen")
+        assert(r.getSeq[Long](2).length == math.max(0, len - 1), s"mode=$codegen")
+      }
+      rows.map(r => (r.getSeq[Long](1), r.getSeq[Long](2))).toSeq
+    }
+    sp.conf.unset("spark.sql.codegen.factoryMode")
+    assert(results.distinct.size == 1, "codegen and interpreted paths disagree")
+  }
+
+  /** sparse_dot's element type: (key, sub, count), boxed so tests can
+    * hold null fields. */
+  private type Sv = Seq[(java.lang.Long, java.lang.Integer, java.lang.Long)]
+  private def sv(es: (Long, Int, Long)*): Sv =
+    es.map { case (k, s, c) => (Long.box(k), Int.box(s), Long.box(c)) }
+
+  test("sparse_dot: exact merge, empty vectors, and SQL-null on a null element or field") {
+    val sp = spark
+    import sp.implicits._
+    val x = sv((1L, 0, 2L), (3L, 0, 4L), (3L, 1, 5L))
+    val cases: Seq[(Sv, Sv)] = Seq(
+      (x, sv((1L, 0, 10L), (3L, 1, 7L), (9L, 0, 1L))), // 2·10 + 5·7
+      (sv(), x),
+      (sv(), sv()),
+      (x :+ null, x),                                   // null element
+      (x, sv((1L, 0, 10L)) :+ ((Long.box(3L), Int.box(1), null))), // null count
+      (x, Seq((null, Int.box(0), Long.box(1L)))),       // null key
+      (Seq((Long.box(1L), null, Long.box(1L))), x))     // null sub
+    val df = cases.toDF("a", "b")
+    for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
+      val got = df.select(expr("sparse_dot(a, b)")).collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+      assert(got == Seq(Some(55L), Some(0L), Some(0L), None, None, None, None),
+        s"mode=$codegen")
+    }
+    spark.conf.unset("spark.sql.codegen.factoryMode")
+  }
+
+  test("sparse_dot matches an aggregate(zip_with(...)) SQL form on random sorted vectors") {
+    val sp = spark
+    import sp.implicits._
+    val rnd = new scala.util.Random(20)
+    def vec(): Sv = sv((0 until rnd.nextInt(12))
+      .map(_ => (rnd.nextInt(8).toLong, rnd.nextInt(3), rnd.nextInt(2001).toLong - 1000L))
+      .groupBy(e => (e._1, e._2)).values.map(_.head).toSeq
+      .sortBy(e => (e._1, e._2)): _*)
+    val df = Seq.fill(200)((vec(), vec())).toDF("a", "b")
+    // per left element, the count of the right element with the same
+    // (key, sub) — keys are unique within a vector, so at most one
+    val ref = expr(
+      "aggregate(zip_with(a, transform(a, x -> aggregate(" +
+        "filter(b, y -> y._1 = x._1 AND y._2 = x._2), CAST(0 AS BIGINT), " +
+        "(s, y) -> s + y._3)), (x, c) -> x._3 * c), CAST(0 AS BIGINT), " +
+        "(acc, v) -> acc + v)")
+    for (codegen <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
+      val rows = df.select(expr("sparse_dot(a, b)"), ref).collect()
+      assert(rows.forall(r => r.getLong(0) == r.getLong(1)), s"mode=$codegen")
+      assert(rows.exists(_.getLong(0) != 0L), "fixture never matched a key")
+    }
+    spark.conf.unset("spark.sql.codegen.factoryMode")
+  }
+
   test("int_dot propagates a null element as null (SQL arithmetic semantics)") {
     val sp = spark
     import sp.implicits._

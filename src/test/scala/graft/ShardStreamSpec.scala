@@ -313,6 +313,41 @@ class ShardStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(runOnce() == 1, "resumes from checkpointed offsets, re-resolved start")
   }
 
+  test("an I/O failure reading the persisted start fails the restart and keeps the file") {
+    val name = seeded10()
+    val local = Files.createTempDirectory("shardcp_flaky")
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.flakyopen.impl", classOf[FlakyOpenFileSystem].getName)
+    def runOnce(): Seq[String] = {
+      val buf = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val q = readStreamDf(name, Map("startingPosition" -> "latest"))
+        .writeStream
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          df.select(col("data").cast("string")).collect().foreach(r => buf.add(r.getString(0)))
+          ()
+        }
+        .option("checkpointLocation", s"flakyopen://$local")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      buf.toArray(Array.empty[String]).toSeq
+    }
+    assert(runOnce().isEmpty, "latest sees nothing pre-existing")
+    val startFile = Files.walk(local).iterator().asScala
+      .find(_.getFileName.toString == "shardstream-start.json")
+    assert(startFile.isDefined, "start file must have been persisted")
+    val persisted = Files.readAllBytes(startFile.get)
+    val svc = ShardServiceRegistry.get(name)
+    (10 until 12).foreach(i => svc.putRecord("partitionKey", s"testData-$i".getBytes(UTF_8), None))
+    FlakyOpenFileSystem.failNextStartOpen.set(true)
+    val err = intercept[StreamingQueryException](runOnce())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("injected open failure")), err)
+    assert(Files.readAllBytes(startFile.get).sameElements(persisted),
+      "a read failure must not re-resolve and overwrite the persisted start")
+    // once the file reads again, the original `latest` baseline holds
+    assert(runOnce().sorted == Seq("testData-10", "testData-11"))
+  }
+
   // ---- cancellation (S10) -------------------------------------------
 
   test("stop() cancels cleanly without error and without fake completion") {
@@ -887,4 +922,22 @@ class ShardStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.size == 6, s"got $got")
     assert(got.sorted == Seq("early-0", "early-1", "early-2", "late-3", "late-4", "late-5"))
   }
+}
+
+/** The local file system under the `flakyopen` scheme; while
+  * `failNextStartOpen` is set, the next `open` of a
+  * `shardstream-start.json` fails with an I/O error. */
+class FlakyOpenFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("flakyopen:///")
+  override def getScheme: String = "flakyopen"
+  override def open(f: org.apache.hadoop.fs.Path,
+                    bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
+    if (f.getName == "shardstream-start.json" &&
+        FlakyOpenFileSystem.failNextStartOpen.getAndSet(false))
+      throw new java.io.IOException(s"injected open failure: $f")
+    else super.open(f, bufferSize)
+}
+
+object FlakyOpenFileSystem {
+  val failNextStartOpen = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
