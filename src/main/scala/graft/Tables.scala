@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.graft.FreshCheckpoint
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -43,7 +46,6 @@ object Tables {
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
           loaded.keySet.removeIf(_._1 == spark)
           derived.keySet.removeIf(_._1 == spark)
-          pinnedKeys.removeIf(_._1 == spark)
           registeredDir.remove(spark)
           hooked.remove(spark)
         }
@@ -55,92 +57,58 @@ object Tables {
       _ => spark.read.parquet(s"$dir/$name.parquet"))
   }
 
-  // Derived intermediates shared across queries (e.g. the part
-  // co-occurrence edge list feeding q138/q145/q146/q148) — memoized per
-  // (session, key) with the same lifecycle as the table loads. The
-  // builder decides whether to persist(); memoization only guarantees
-  // every consumer in the session sees the SAME plan (and therefore the
-  // same cached blocks) instead of re-deriving it.
   private val derived =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, StorageLevel)]()
 
-  // Memoized substrates whose results are PINNED by RDD-level
-  // checkpoints (localCheckpoint) rather than catalog-managed persist:
-  // catalog.clearCache() cannot see those blocks, so the bench's
-  // per-query isolation hygiene calls [[dropPinnedSubstrates]] to keep
-  // every per-query line charged with its full substrate cost
-  // (round-over-round comparable — the same convention clearCache
-  // already enforces on the persist-backed graph substrates). Real
-  // sessions and Verify never drop them: there the whole point is one
-  // build per (session, dataset).
-  private val pinnedKeys =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-        java.lang.Boolean]())
-
-  // Serialized, unlike memo: pinned builders are EAGER and
-  // side-effecting (localCheckpoint jobs), so memo's benign
-  // lose-the-race duplicate build would here run the dominant
-  // occurrence pass twice AND leak the loser's checkpoint blocks
-  // (invisible to clearCache). Builds are rare and seconds-long; a
-  // coarse lock is the correct trade.
-  def memoPinned(spark: SparkSession, key: String)
-      (build: => DataFrame): DataFrame = pinnedKeys.synchronized {
-    val df = memo(spark, key)(build)
-    pinnedKeys.add((spark, key))
-    df
-  }
-
-  // Same lock as memoPinned: a drop interleaving between memo's
-  // putIfAbsent and pinnedKeys.add would otherwise leave an untracked
-  // cached substrate (checkpoint blocks leak, bench isolation breaks).
-  def dropPinnedSubstrates(spark: SparkSession): Unit =
-    pinnedKeys.synchronized {
-      val it = pinnedKeys.iterator()
-      while (it.hasNext) {
-        val k = it.next()
-        if (k._1 == spark) {
-          val df = derived.remove(k)
-          if (df != null) releaseLocalCheckpoint(df)
-          it.remove()
-        }
+  /** Derived substrates shared across queries (the cooc degree and
+    * adjacency tables, the LPA labels, the dedup cut positions, the ANN
+    * sweeps): one DataFrame per (session, key), so every consumer in a
+    * session reads the same plan and the same stored blocks.
+    *
+    * One lifecycle covers every substrate, whatever its builder does:
+    *  - builds run under one lock, so a key is built exactly once even
+    *    when its builder is eager (a localCheckpoint job); builders may
+    *    memoize other keys (the lock is reentrant) but must not wait
+    *    on another thread that calls `memo`;
+    *  - each entry records the storage level its builder left it at,
+    *    and a hit re-persists an entry that lost its cache registration
+    *    (`catalog.clearCache()` drops registrations, not memo entries);
+    *  - [[dropPinnedSubstrates]] removes every entry of a session and
+    *    releases its storage, persisted or checkpointed.
+    *
+    * A builder that wants its result cached calls `.persist(...)`
+    * itself; one that pins it calls `localCheckpoint`. */
+  def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    derived.synchronized {
+      evictOnStop(spark)
+      val k = (spark, key)
+      // get/put, not computeIfAbsent: builders nest, and a nested
+      // computeIfAbsent on one ConcurrentHashMap throws
+      derived.get(k) match {
+        case null =>
+          val df = build
+          derived.put(k, (df, df.storageLevel))
+          df
+        case (df, level) =>
+          if (level != StorageLevel.NONE && df.storageLevel == StorageLevel.NONE)
+            df.persist(level)
+          df
       }
     }
 
-  def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    evictOnStop(spark)
-    // get-then-putIfAbsent, NOT computeIfAbsent: substrate builders
-    // nest (cooc_deg builds on cooc_pairs, the adjacency substrates on
-    // both), and nested computeIfAbsent on one ConcurrentHashMap is
-    // undefined — it throws IllegalStateException when the inner key
-    // lands in the bin the outer call holds. The race this trades
-    // away is benign: two threads may both run `build` (lazy plan
-    // construction, no side effects), and putIfAbsent keeps exactly
-    // one winner so the memo identity guarantee stands.
-    val k = (spark, key)
-    val cur = derived.get(k)
-    if (cur != null) cur
-    else {
-      val built = build
-      val prev = derived.putIfAbsent(k, built)
-      if (prev != null) prev else built
+  /** Drop every [[memo]] entry of `spark` and release its storage: the
+    * cache registration (`unpersist`) and the RDD-level blocks of any
+    * `localCheckpoint` in its plan, which `catalog.clearCache()` cannot
+    * see. The bench calls this between queries so each timed line pays
+    * for the substrates it reads; Verify and real sessions never do.
+    * Entries of other sessions are untouched. */
+  def dropPinnedSubstrates(spark: SparkSession): Unit = derived.synchronized {
+    derived.keySet.asScala.filter(_._1 == spark).foreach { k =>
+      val (df, _) = derived.remove(k)
+      df.unpersist(blocking = false)
+      FreshCheckpoint.releaseLocalCheckpoint(df)
     }
   }
-
-  /** Release the block-manager storage behind a localCheckpoint'ed
-    * DataFrame. `Dataset.localCheckpoint` persists its internal RDD at
-    * the RDD level, OUTSIDE the SQL cache manager — so the bench
-    * harness's per-query `catalog.clearCache()` hygiene never sees it
-    * and only ContextCleaner GC would reclaim it (ADVICE r17).
-    * Substrate builders call this on intermediate checkpoints as soon
-    * as the downstream result is itself pinned; a no-op on anything
-    * that isn't a checkpointed plan. */
-  def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")

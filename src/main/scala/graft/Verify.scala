@@ -1,8 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.util.Try
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py).
+  * Exits 1, after writing every other dump, if any query failed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -22,19 +24,29 @@ object Verify {
     // (the driver's path).
     val only = sys.env.get("GRAFT_VERIFY_ONLY").map(_.split(",").toSet)
     def keep(name: String): Boolean = only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = dump(spark, sfDir, outDir, SparkEntry.queries.filter(kv => keep(kv._1)))
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(keep))
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Write each query's result to `outDir/<name>` as parquet and return
+    * the names of the queries that failed. A failing query (any
+    * non-fatal exception, which is what `Try` catches) does not stop
+    * the others; a fatal error does. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame]): Seq[String] =
+    queries.toSeq.flatMap { case (name, fn) =>
+      val run = Try(fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      run.failed.foreach(e => System.err.println(s"[verify] $name failed: ${e.getMessage}"))
       // queries that .cache() intermediates (q36/q51/q58, and their
       // dependents) would otherwise pin them for the whole run
       spark.catalog.clearCache()
+      run.failed.toOption.map(_ => name)
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(keep))
-    spark.stop()
-  }
 
   /** The oracle SQL of the kept queries as one JSON object (name → SQL),
     * the input of tools/check_oracle.py. Escapes backslash, quote and

@@ -144,19 +144,18 @@ object Dedup extends QueryPack {
     * per cut position: (doc_id, p, keeper_doc) — each position has
     * exactly one L-char substring, hence exactly one keeper.
     *
-    * Memoized per (session, dataset) via [[T.memo]] (the q138/q159
-    * graph-substrate lifecycle — VERDICT r17 #1): three queries consume
-    * this, and the |chars|-row occurrence pass builds ONCE per session.
-    * The result is pinned by an eager localCheckpoint (cut positions
-    * only — the duplicate-region fraction of the corpus), and the two
-    * char-grain intermediate checkpoints are explicitly RELEASED once
-    * it is (ADVICE r17: RDD-level checkpoint storage is invisible to
-    * `catalog.clearCache()`, so without the release only ContextCleaner
-    * GC would reclaim them). At 100 TB the pinned intermediates become
+    * Memoized per (session, dataset) via [[T.memo]]: three queries
+    * consume this, and the |chars|-row occurrence pass builds ONCE per
+    * session. The result is pinned by an eager localCheckpoint (cut
+    * positions only — the duplicate-region fraction of the corpus),
+    * which the memo releases when the session's substrates are
+    * dropped. The two char-grain intermediate checkpoints are not
+    * memo entries, so the builder releases them itself as soon as the
+    * result is pinned. At 100 TB the pinned intermediates become
     * reliable disk checkpoints; the build stays one hash agg + one
     * equi-join back — all-pairs never appears. */
   private def cutOccurrences(s: SparkSession, d: String): DataFrame =
-    T.memoPinned(s, s"dedup:cutocc:$d") {
+    T.memo(s, s"dedup:cutocc:$d") {
       import s.implicits._
       graft.GraftExtensions.ensureRegistered(s)
       val L = 50
@@ -186,23 +185,22 @@ object Dedup extends QueryPack {
         .filter(!($"doc_id" === $"kk.doc_id" && $"p" === $"kk.p"))
         .select($"doc_id", $"p", $"kk.doc_id".as("keeper_doc"))
         .localCheckpoint()
-      T.releaseLocalCheckpoint(occ)
-      T.releaseLocalCheckpoint(vsub)
+      org.apache.spark.sql.graft.FreshCheckpoint.releaseLocalCheckpoint(occ)
+      org.apache.spark.sql.graft.FreshCheckpoint.releaseLocalCheckpoint(vsub)
       out
     }
 
   /** The merged per-doc cut RANGES over [[cutOccurrences]]: non-keeper
     * positions cover [p, p+L−1]; islands merge per doc via the
     * gaps-and-islands cummax (q147's kernel at char grain). Returns
-    * (doc_id, start_char, end_char), 1-based inclusive. Memoized (and
-    * registered pinned so the bench's substrate drop removes this plan
-    * together with the checkpointed RDD it references), but NOT
+    * (doc_id, start_char, end_char), 1-based inclusive. Memoized (a
+    * drop removes this plan with the checkpoint it reads), but NOT
     * re-checkpointed: the lineage stops at the pinned cut-occurrence
     * RDD, so each consumer recomputes only a doc-partitioned window
     * over those ~|cut| rows — cheaper than another eager
     * materialization barrier. */
   private def cutSpans(s: SparkSession, d: String): DataFrame =
-    T.memoPinned(s, s"dedup:cutspans:$d") {
+    T.memo(s, s"dedup:cutspans:$d") {
       import s.implicits._
       val L = 50
       val cut = cutOccurrences(s, d).select($"doc_id", $"p").distinct()

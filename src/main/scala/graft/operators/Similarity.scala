@@ -238,11 +238,11 @@ object Similarity extends QueryPack {
 
   /** Exact brute-force top-3 — the sweep's ground truth, memoized +
     * persisted so the 4-config sweep pays the corpus scan once. */
-  private def annExact3(s: SparkSession, d: String): DataFrame =
+  private[graft] def annExact3(s: SparkSession, d: String): DataFrame =
     T.memo(s, s"ann_exact3:$d") {
       queries("q40_cosine_topk")(s, d)
         .filter(col("rn") <= 3).select(col("qid"), col("vec_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // harness-released (per-query clearCache)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** K-means cell assignment (vec_id, kcell): every vector reassigned
@@ -252,7 +252,7 @@ object Similarity extends QueryPack {
     * q142 audit measured as weak. Memoized + persisted: q175 buckets
     * on it for both the query and corpus sides, and q142 composes
     * q175. */
-  private def kmeansCells(s: SparkSession, d: String): DataFrame =
+  private[graft] def kmeansCells(s: SparkSession, d: String): DataFrame =
     T.memo(s, s"ann_kmcells:$d") {
       import s.implicits._
       val emb = quantized(s, d)
@@ -264,7 +264,7 @@ object Similarity extends QueryPack {
         .withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
         .select($"vec_id", $"clab".as("kcell"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // harness-released (per-query clearCache)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
   /** Probe-depth sweep: micro-averaged recall@3 of the multiprobe IVF

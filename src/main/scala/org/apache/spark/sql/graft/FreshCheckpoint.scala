@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 
@@ -26,25 +26,23 @@ import org.apache.spark.sql.functions.col
   * estimation artifact; the data is thousands of rows).
   *
   * [[freshLocalCheckpoint]] therefore checkpoints and then rebuilds
-  * the DataFrame over the SAME materialized internal RDD via
-  * `internalCreateDataFrame`, whose `LogicalRDD` carries NO origin
-  * stats (fresh default estimates every iteration — constant-size,
-  * exactly like a parquet scan). Same rows, same schema; only the
-  * estimate feedback loop is cut. The rebuilt node reports
-  * `UnknownPartitioning` — measured (round 20): under AQE, PLAIN
-  * `localCheckpoint`'s LogicalRDD ALSO reports UnknownPartitioning
-  * (the adaptive wrapper hides the final plan's layout at capture
-  * time), so nothing is lost relative to it, and for the
-  * PageRank-family loops the unknown layout is strictly useful — the
-  * state-side exchange it forces is what lets AQE observe the small
-  * per-iteration state and broadcast it over an exchange-free
+  * the checkpoint's `LogicalRDD` over the SAME materialized RDD with
+  * NO origin stats (a fresh default estimate, or the real stored size,
+  * every iteration — constant-size, exactly like a parquet scan). Same
+  * rows, same schema; only the estimate feedback loop is cut. The node
+  * keeps the layout the checkpoint captured, which under AQE is
+  * `UnknownPartitioning` (the adaptive wrapper hides the final plan's
+  * layout at capture time, measured in FreshCheckpointSpec), and for
+  * the PageRank-family loops the unknown layout is strictly useful —
+  * the state-side exchange it forces is what lets AQE observe the
+  * small per-iteration state and broadcast it over an exchange-free
   * substrate scan (the coocDir rule).
   *
   * [[layoutLocalCheckpoint]] is the opposite trade for loops that
   * JOIN ON a stable key every round: it repartitions to an EXPLICIT
   * partition count on the key (explicit-N hash exchanges are never
   * AQE-coalesced, so the claimed layout is exact by construction),
-  * optionally sorts within partitions, checkpoints, and rebuilds the
+  * sorts within partitions, checkpoints, and rebuilds the
   * LogicalRDD CLAIMING that HashPartitioning/ordering (what
   * `Dataset.checkpoint` captures in non-adaptive plans) with no origin
   * stats. Rounds that join or aggregate on the key then satisfy their
@@ -54,18 +52,21 @@ import org.apache.spark.sql.functions.col
   * orders them; localCheckpoint materializes partitions 1:1 (a map) —
   * so the claimed metadata is true of the stored blocks.
   *
-  * Version coupling (ADVICE r19): this leans on Spark-internal
-  * surfaces — `asInstanceOf[sql.classic.Dataset]`, `private[sql]`
-  * `internalCreateDataFrame`, and `LogicalRDD.copy`'s curried
-  * (session, originStats, originConstraints) list — that can shift on
-  * a Spark minor bump. FreshCheckpointSpec pins the behaviors (stats
-  * reset, claimed layout satisfying a same-key aggregation without an
-  * exchange) so a bump that changes either fails the suite, not
-  * production. The rebuilt nodes' fallback estimate is
-  * `spark.sql.defaultSizeInBytes` (effectively ∞), so the state can
-  * never be STATICALLY planned as a broadcast side; that is accepted —
-  * a modest constant estimate could mis-broadcast a 100 TB state,
-  * while AQE's runtime conversion sees real sizes.
+  * Both functions checkpoint eagerly and then share one rebuild step.
+  * This module is the one place that knows a checkpoint's storage is
+  * its `LogicalRDD`'s RDD: the rebuild reads that RDD's stored size,
+  * and [[releaseLocalCheckpoint]] frees it.
+  *
+  * Version coupling: this leans on Spark-internal surfaces —
+  * `asInstanceOf[sql.classic.Dataset]`, `Dataset.ofRows`, and
+  * `LogicalRDD.copy`'s curried (session, originStats, originConstraints)
+  * list — that can shift on a Spark minor bump. FreshCheckpointSpec pins
+  * the behaviors (stats reset, real or default size, claimed layout
+  * satisfying a same-key aggregation without an exchange) so a bump
+  * that changes either fails the suite, not production. With
+  * `realSizeStats = false` the estimate is `spark.sql.defaultSizeInBytes`
+  * (effectively ∞), so the state is never STATICALLY planned as a
+  * broadcast side; AQE's runtime conversion still sees real sizes.
   */
 object FreshCheckpoint {
   /** The REAL materialized size of the (eager) checkpoint's persisted
@@ -96,44 +97,55 @@ object FreshCheckpoint {
     * ∞ estimate keeps AQE's runtime shape. Every other fixpoint
     * measured faster (or flat) with real stats. */
   def freshLocalCheckpoint(df: DataFrame,
-      realSizeStats: Boolean = true): DataFrame = {
-    val ck = df.localCheckpoint()
-    val cds = ck.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    cds.queryExecution.analyzed match {
-      case lr: LogicalRDD if realSizeStats =>
-        org.apache.spark.sql.classic.Dataset.ofRows(cds.sparkSession,
-          lr.copy()(cds.sparkSession, realStats(cds, lr.rdd.id), None))
-      case _ =>
-        cds.sparkSession.internalCreateDataFrame(
-          cds.queryExecution.toRdd, cds.schema)
+      realSizeStats: Boolean = true): DataFrame =
+    rebuild(df.localCheckpoint(), realSizeStats)(
+      lr => (lr.outputPartitioning, lr.outputOrdering))
+
+  /** Hash-partition on `keys` into exactly `n` partitions, sort within
+    * each, checkpoint, and claim that layout on the rebuilt node. */
+  def layoutLocalCheckpoint(df: DataFrame, keys: Seq[String], n: Int): DataFrame = {
+    require(n > 0, s"layoutLocalCheckpoint: partition count must be > 0, got $n")
+    keys.find(k => !df.columns.contains(k)).foreach { k =>
+      throw new IllegalArgumentException(
+        s"layoutLocalCheckpoint: no output column named $k")
+    }
+    val keyCols = keys.map(col)
+    val ck = df.repartition(n, keyCols: _*).sortWithinPartitions(keyCols: _*)
+      .localCheckpoint()
+    rebuild(ck, realSizeStats = true) { lr =>
+      val attrs = keys.map(k => lr.output.find(_.name == k).get)
+      (HashPartitioning(attrs, n), attrs.map(a => SortOrder(a, Ascending)))
     }
   }
 
-  def layoutLocalCheckpoint(df: DataFrame, keys: Seq[String], n: Int,
-      sorted: Boolean = true): DataFrame = {
-    require(n > 0, s"layoutLocalCheckpoint: partition count must be > 0, got $n")
-    val keyCols = keys.map(col)
-    val arranged0 = df.repartition(n, keyCols: _*)
-    val arranged =
-      if (sorted) arranged0.sortWithinPartitions(keyCols: _*) else arranged0
-    val ck = arranged.localCheckpoint()
+  /** The shared rebuild: re-wrap a checkpoint's `LogicalRDD` with the
+    * layout `layout` claims, no origin constraints, and either no origin
+    * stats or the real block-manager size. If `localCheckpoint` ever
+    * stops returning a bare LogicalRDD, fall back to a layout-free
+    * rebuild rather than claim anything. */
+  private def rebuild(ck: DataFrame, realSizeStats: Boolean)(
+      layout: LogicalRDD => (Partitioning, Seq[SortOrder])): DataFrame = {
     val cds = ck.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
+    val s = cds.sparkSession
     cds.queryExecution.analyzed match {
       case lr: LogicalRDD =>
-        val attrs = keys.map(k => lr.output.find(_.name == k).getOrElse(
-          throw new IllegalArgumentException(
-            s"layoutLocalCheckpoint: no output column named $k")))
-        val part = HashPartitioning(attrs, n)
-        val ord =
-          if (sorted) attrs.map(a => SortOrder(a, Ascending)) else Nil
-        org.apache.spark.sql.classic.Dataset.ofRows(cds.sparkSession,
-          lr.copy(outputPartitioning = part, outputOrdering = ord)(
-            cds.sparkSession, realStats(cds, lr.rdd.id), None))
-      case other =>
-        // localCheckpoint stopped returning a bare LogicalRDD — fall
-        // back to the layout-free rebuild rather than claim anything
-        cds.sparkSession.internalCreateDataFrame(
-          cds.queryExecution.toRdd, cds.schema)
+        val stats = if (realSizeStats) realStats(cds, lr.rdd.id) else None
+        val (part, ord) = layout(lr)
+        org.apache.spark.sql.classic.Dataset.ofRows(s,
+          lr.copy(outputPartitioning = part, outputOrdering = ord)(s, stats, None))
+      case _ =>
+        s.internalCreateDataFrame(cds.queryExecution.toRdd, cds.schema)
     }
   }
+
+  /** Release the block-manager storage behind a checkpointed DataFrame.
+    * `localCheckpoint` persists its internal RDD at the RDD level,
+    * outside the SQL cache manager, so `catalog.clearCache()` never sees
+    * it. Unpersists the RDD of every `LogicalRDD` in the plan; a no-op on
+    * a plan without one. */
+  def releaseLocalCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

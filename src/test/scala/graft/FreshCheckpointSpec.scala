@@ -120,4 +120,42 @@ class FreshCheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
         "if this fails, Spark now captures adaptive layout; re-measure " +
         "the layoutLocalCheckpoint call sites")
   }
+
+  test("realSizeStats chooses the default estimate or the stored size; rows are intact") {
+    val s = spark; import s.implicits._
+    val src = (1L to 100L).map(v => (v, v * 10)).toDF("v", "p")
+    val rows = src.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+    def size(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val key = "spark.sql.defaultSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "123456789")
+    try {
+      val dflt = freshLocalCheckpoint(src, realSizeStats = false)
+      val real = freshLocalCheckpoint(src)
+      assert(size(dflt) == BigInt(123456789L),
+        "realSizeStats = false must keep spark.sql.defaultSizeInBytes")
+      assert(size(real) > 0 && size(real) < BigInt(123456789L),
+        s"realSizeStats = true must report the stored size, got ${size(real)}")
+      Seq(dflt, real).foreach { df =>
+        assert(df.schema == src.schema)
+        assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.sameElements(rows))
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("layoutLocalCheckpoint rejects a non-positive partition count and an unknown key") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.graft.FreshCheckpoint.layoutLocalCheckpoint
+    val src = Seq((1L, 10L)).toDF("v", "p")
+    val zero = intercept[IllegalArgumentException](layoutLocalCheckpoint(src, Seq("v"), 0))
+    assert(zero.getMessage.contains("partition count must be > 0, got 0"))
+    val neg = intercept[IllegalArgumentException](layoutLocalCheckpoint(src, Seq("v"), -3))
+    assert(neg.getMessage.contains("partition count must be > 0, got -3"))
+    val unknown = intercept[IllegalArgumentException](
+      layoutLocalCheckpoint(src, Seq("v", "nope"), 2))
+    assert(unknown.getMessage.contains("no output column named nope"))
+  }
 }

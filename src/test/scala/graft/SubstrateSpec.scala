@@ -5,17 +5,16 @@ import org.apache.spark.storage.StorageLevel
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the shared co-occurrence substrate's contract: since round 10
-  * `Relational.coocPairs` READS THE ON-DISK BUCKETED TABLE (the
-  * lineitem self-join is paid once per warehouse, surviving the
-  * harness's per-query cache clearing), and the derived substrates
-  * (degree, oriented edges, adjacency, weighted-degree) are memoized
-  * per (session, dir) with a SELF-HEALING persist that survives
-  * harness-level `catalog.clearCache()` hygiene (which drops cache
+/** Pins the shared substrates' contract: `Relational.coocPairs` READS
+  * THE ON-DISK BUCKETED TABLE (the lineitem self-join is paid once per
+  * warehouse, surviving the harness's per-query cache clearing), and
+  * the derived substrates (degree, oriented edges, adjacency,
+  * weighted-degree, the ANN exact top-3 and k-means cells) are memoized
+  * per (session, dir) and persisted by their builders; a memo hit
+  * re-persists them after `catalog.clearCache()` (which drops cache
   * REGISTRATIONS, not just blocks — without the re-mark, every later
-  * consumer would silently recompute). The memo pattern is also the
-  * storage-lifecycle fix: one shared copy per session instead of a
-  * fresh set of blocks per query call (VERDICT r9 #1).
+  * consumer would silently recompute). One shared copy per session
+  * instead of a fresh set of blocks per query call.
   */
 class SubstrateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -59,7 +58,9 @@ class SubstrateSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("cooc_ed", () => operators.Relational.coocOrientedEdges(spark, dir)),
       ("cooc_adj", () => operators.Relational.coocOrientedAdj(spark, dir)),
       ("cooc_wdeg", () => operators.Relational.coocWdeg(spark, dir)),
-      ("cooc_dw", () => operators.Relational.coocDw(spark, dir)))
+      ("cooc_dw", () => operators.Relational.coocDw(spark, dir)),
+      ("ann_exact3", () => operators.Similarity.annExact3(spark, dir)),
+      ("ann_kmcells", () => operators.Similarity.kmeansCells(spark, dir)))
     subs.foreach { case (name, get) =>
       val a = get()
       assert(a eq get(), s"$name: memo must return the identical instance")
@@ -91,7 +92,7 @@ class SubstrateSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deg = operators.Relational.coocDeg(spark, dir)
     assert(deg.except(raw).isEmpty && raw.except(deg).isEmpty,
       "degree substrate differs from the direct degree count")
-    // memoized: same plan instance; self-healing persist like coocPairs
+    // memoized: same plan instance, re-persisted by a memo hit
     assert(deg eq operators.Relational.coocDeg(spark, dir))
     spark.catalog.clearCache()
     assert(operators.Relational.coocDeg(spark, dir).storageLevel
